@@ -464,19 +464,8 @@ object SparkEntry {
       // the second isn't serialized behind the first (guide §2.6); each
       // side's sketch is built by the identical per-side plan, so the
       // sketch contents (and the drift verdicts) are unchanged
-      val exec = java.util.concurrent.Executors.newFixedThreadPool(2)
-      val (skBase, skCur) = try {
-        implicit val ec: scala.concurrent.ExecutionContext =
-          scala.concurrent.ExecutionContext.fromExecutorService(exec)
-        val fBase = scala.concurrent.Future(
-          graft.stats.Drift.sketchColumn(base, "v"))
-        val fCur = scala.concurrent.Future(
-          graft.stats.Drift.sketchColumns(cur, Seq("v", "v_drift")))
-        (scala.concurrent.Await.result(fBase,
-           scala.concurrent.duration.Duration.Inf),
-         scala.concurrent.Await.result(fCur,
-           scala.concurrent.duration.Duration.Inf))
-      } finally exec.shutdown() // never leak pool threads on a failed job
+      val (skBase, skCur) = graft.Par(graft.stats.Drift.sketchColumn(base, "v"),
+        graft.stats.Drift.sketchColumns(cur, Seq("v", "v_drift")))
       val quiet = graft.stats.Drift.checkSketches(skBase, skCur("v"), "v")
       val loud = graft.stats.Drift.checkSketches(skBase, skCur("v_drift"), "v")
       Seq(
@@ -497,15 +486,11 @@ object SparkEntry {
       // fast path for the udaf buffer (measured 20x slower)
       // the HLL agg and the exact-distinct agg are independent jobs —
       // overlap them (guide §2.6); each plan and result is unchanged
-      val fEst = scala.concurrent.Future(li.agg(
-        hll(xxhash64(col("l_partkey"))).as("est_parts"),
-        hll(xxhash64(col("l_orderkey"))).as("est_orders")).collect()(0))(
-        scala.concurrent.ExecutionContext.global)
-      val exact = li.agg(
-        countDistinct(col("l_partkey")).as("exact_parts"),
-        countDistinct(col("l_orderkey")).as("exact_orders")).collect()(0)
-      val est = scala.concurrent.Await.result(fEst,
-        scala.concurrent.duration.Duration.Inf)
+      val (est, exact) = graft.Par(
+        li.agg(hll(xxhash64(col("l_partkey"))).as("est_parts"),
+          hll(xxhash64(col("l_orderkey"))).as("est_orders")).collect()(0),
+        li.agg(countDistinct(col("l_partkey")).as("exact_parts"),
+          countDistinct(col("l_orderkey")).as("exact_orders")).collect()(0))
       Seq(("l_partkey", est.getLong(0), exact.getLong(0)),
           ("l_orderkey", est.getLong(1), exact.getLong(1)))
         .toDF("column", "estimate", "exact")
@@ -573,12 +558,10 @@ object SparkEntry {
       val people = graft.fixtures.Fixtures.peoplePq(s)
       val tm = graft.semantic.Detector.detectTypes(people)
       // row count and the validation agg are independent jobs — overlap them
-      val fCount = scala.concurrent.Future(people.count())(
-        scala.concurrent.ExecutionContext.global)
-      val issues = graft.semantic.SemanticValidators.validate(people, tm,
-        java.sql.Timestamp.valueOf("2026-01-01 00:00:00"))
-      val sc = graft.semantic.Scorer.score(scala.concurrent.Await.result(fCount,
-        scala.concurrent.duration.Duration.Inf), issues)
+      val (n, issues) = graft.Par(people.count(),
+        graft.semantic.SemanticValidators.validate(people, tm,
+          java.sql.Timestamp.valueOf("2026-01-01 00:00:00")))
+      val sc = graft.semantic.Scorer.score(n, issues)
       (sc.breakdown.map(l => (l.rule, l.severity, l.rows, l.penalty)) ++
         Seq(("TOTAL", "", 0L, sc.penaltyTotal), ("SCORE", "", 0L, sc.score)))
         .toDF("rule", "severity", "rows", "penalty")
@@ -607,29 +590,18 @@ object SparkEntry {
       // are independent — run them concurrently (guide §2.6) and feed the
       // A23 fold the ALREADY-computed profiles instead of re-profiling both
       // frames inside scoreFrames (r5 profiled `cleaned` twice)
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-      val (m, v2) = try {
-        implicit val ec: scala.concurrent.ExecutionContext =
-          scala.concurrent.ExecutionContext.fromExecutorService(pool)
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration.Inf
-        val fProfI = Future(graft.stats.Profiler.profile(people))
-        val fProfF = Future(graft.stats.Profiler.profile(cleaned))
-        val fDupI = Future(graft.stats.Profiler.duplicateRowCount(people))
-        val fDupF = Future(graft.stats.Profiler.duplicateRowCount(cleaned))
-        val prof = Await.result(fProfF, Inf)
-        val rows = prof.headOption.map(p => p.count + p.nulls).getOrElse(0L)
-        val missCells = prof.map(_.nulls).sum
-        val logs = Seq(
-          graft.stats.StepLog("verify", passed = false, issues = 2, warnings = 3),
-          graft.stats.StepLog("enforce_schema", typeConversions = 5, errors = 1),
-          graft.stats.StepLog("deduplicate", duplicatesRemoved = 0))
-        val mm = graft.stats.ReportBuilder.metrics(rows, prof.size, missCells,
-          logs, initialDupRows = Await.result(fDupI, Inf))
-        val (v, _) = graft.stats.QualityReportV2.scoreFromProfiles(
-          Await.result(fProfI, Inf), prof, Await.result(fDupF, Inf), Nil)
-        (mm, v)
-      } finally pool.shutdown() // never leak pool threads on a failed job
+      val (profI, prof, dupI, dupF) = graft.Par(
+        graft.stats.Profiler.profile(people), graft.stats.Profiler.profile(cleaned),
+        graft.stats.Profiler.duplicateRowCount(people),
+        graft.stats.Profiler.duplicateRowCount(cleaned))
+      val rows = prof.headOption.map(p => p.count + p.nulls).getOrElse(0L)
+      val logs = Seq(
+        graft.stats.StepLog("verify", passed = false, issues = 2, warnings = 3),
+        graft.stats.StepLog("enforce_schema", typeConversions = 5, errors = 1),
+        graft.stats.StepLog("deduplicate", duplicatesRemoved = 0))
+      val m = graft.stats.ReportBuilder.metrics(rows, prof.size, prof.map(_.nulls).sum,
+        logs, initialDupRows = dupI)
+      val (v2, _) = graft.stats.QualityReportV2.scoreFromProfiles(profI, prof, dupF, Nil)
       Seq((m.completenessScore, m.validityScore, m.consistencyScore,
           m.uniquenessScore, m.overallScore, v2))
         .toDF("a22_completeness", "a22_validity", "a22_consistency",

@@ -47,12 +47,10 @@ object RuleGenerator {
     // profile and duplicate-count are independent jobs — overlap them
     // (guide §2.6); the serial-rate agg below genuinely depends on the
     // profile (IQR bounds), so it stays sequential
-    val fDups = scala.concurrent.Future(Profiler.duplicateRowCount(df))(
-      scala.concurrent.ExecutionContext.global)
-    val profiles = Profiler.profile(df).map(p => p.column -> p).toMap
+    val (dups, profs) = graft.Par(Profiler.duplicateRowCount(df), Profiler.profile(df))
+    val profiles = profs.map(p => p.column -> p).toMap
     val rows = profiles.values.headOption.map(p => p.count + p.nulls).getOrElse(0L)
-    val hasDups = scala.concurrent.Await.result(fDups,
-      scala.concurrent.duration.Duration.Inf) > 0
+    val hasDups = dups > 0
 
     // ONE extra agg: Excel-serial rate per column (serial heuristic + DOB/AGE
     // quality alert) + IQR outlier counts for the A24 penalty — bounds come

@@ -85,7 +85,7 @@ object Components {
     if (edgeSig._1 == 0) return empty
     if (edgeSig._1 <= smallEdgeLimit) {
       lastRounds.set(0)
-      return driverComponents(edges, pairs, aCol)
+      return driverComponents(edges)
     }
 
     var iter = 0
@@ -141,8 +141,7 @@ object Components {
     * (u > v, distinct): (id → min id of its component) for every node in an
     * edge — the same mapping the star-contraction fixpoint yields. Ids
     * compare via their natural order (long/string), matching min/least. */
-  private def driverComponents(edges: DataFrame, pairs: DataFrame,
-                               aCol: String): DataFrame = {
+  private def driverComponents(edges: DataFrame): DataFrame = {
     // Strings must compare the way Spark's min/least compare them — as
     // UTF-8 BYTES (code-point order). Java String.compareTo is UTF-16
     // code-unit order, which disagrees for supplementary characters
@@ -184,9 +183,11 @@ object Components {
     // the map, and iterating a live key view during mutation is undefined
     // for scala mutable collections (review r6)
     val out = parent.keys.toSeq.map(k => org.apache.spark.sql.Row(k, find(k)))
-    val idType = pairs.schema(aCol).dataType
-    pairs.sparkSession.createDataFrame(
-      pairs.sparkSession.sparkContext.parallelize(out, 1),
+    // the canonical edge column carries the id type after greatest/least
+    // widened mixed int/long inputs, the same type the distributed path emits
+    val idType = edges.schema("u").dataType
+    edges.sparkSession.createDataFrame(
+      edges.sparkSession.sparkContext.parallelize(out, 1),
       org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("id", idType),
         org.apache.spark.sql.types.StructField("component", idType))))

@@ -10,26 +10,18 @@ import graft.rules.{BoundRule, ValidationEngine}
  */
 object UniquenessCheck {
   /**
-   * Global uniqueness of `key` via a salted two-level hash-aggregate
-   * (SURVEY §7.3 step 5; north rule "uniqueness via salted repartition +
-   * hash-aggregate on doc_id").
-   *
-   * Level 1 groups on `(pmod(hash(key), salts), key)` so a hot key (skewed
-   * prefix) is *not* a problem for the partial aggregation: Spark's
-   * hash-aggregate does map-side partial combine, and AQE splits any skewed
-   * shuffle partition. Level 2 re-aggregates per key. Returns
-   * `(key, dup_count)` for keys seen more than once. Null/blank keys are NOT
-   * uniqueness violations (they violate Required instead) — matching pandas
-   * `duplicated(subset=[k], keep=False)` flagging only genuine value groups
-   * is handled by the caller keeping nulls if desired.
+   * Global uniqueness of `key` over its non-null values (an embedded
+   * uniqueness constraint): one hash-aggregate, `(key, dup_count)` for keys
+   * seen more than once. Hot keys are skew-safe without salting: the
+   * aggregate combines map-side, so each task ships at most one partial
+   * count per distinct key, and AQE coalesces or splits the shuffle
+   * partitions. Null keys are not uniqueness violations (they violate
+   * Required instead).
    */
-  def duplicateKeys(df: DataFrame, key: String, salts: Int = 64): DataFrame =
-    df.select(col(key))
-      .where(col(key).isNotNull)
-      .groupBy(pmod(xxhash64(col(key)), lit(salts)).as("__salt"), col(key))
-      .agg(count(lit(1)).as("__cnt"))
+  def duplicateKeys(df: DataFrame, key: String): DataFrame =
+    df.where(col(key).isNotNull)
       .groupBy(col(key))
-      .agg(sum("__cnt").as("dup_count"))
+      .agg(count(lit(1)).as("dup_count"))
       .where(col("dup_count") > 1)
 
   /** Violation rows for duplicated keys: left-semi join of the docs table
@@ -106,7 +98,10 @@ case class EngineConfig(
       * verdict aggregation reuses the rule pass instead of re-scanning the
       * docs table (~40 B/row, MEMORY_AND_DISK). At extreme scale where even
       * the narrow frame shouldn't be spilled (10^12 rows ≈ tens of TB), set
-      * false to trade one extra narrow column-pruned scan for zero cache. */
+      * false for zero cache: every later read of the narrow frame is then a
+      * column-pruned re-scan — on a full run three id-only scans (uniqueness
+      * key scan, semi-join probe, verdict aggregation), one `spans` decode
+      * for RI and one scan of the ledger-sketch inputs. */
     persistAnnotations: Boolean = true,
     /** Numeric expressions sketched per partition into the ledger as KLL
       * quantile sketches (name → column expr over the docs table), feeding
@@ -151,6 +146,19 @@ case class EngineConfig(
  * execution constraint — the row-level rule pass is one whole-table projection
  * + one groupBy(part) aggregate (2 Spark jobs total), NOT a driver loop over
  * partitions. Only resume bookkeeping is per-partition.
+ *
+ * Reads of the docs table (pinned by a scan census in GoldenEngineSpec): a
+ * full run — nothing skipped by resume, no `limitParts`, no content
+ * passthroughs — sources uniqueness (key scan + semi-join probe), RI refs,
+ * the verdict aggregation and the ledger sketches from the narrow rule-pass
+ * frame. With the frame persisted the docs table is decoded once; without,
+ * each of those reads is a column-pruned scan (see
+ * [[EngineConfig.persistAnnotations]]). Other runs read the uniqueness key
+ * twice and the RI spans once more from the docs table itself: uniqueness is
+ * global but the narrow frame covers only in-scope partitions, and a
+ * passthrough-widened cache costs more to re-read than a pruned parquet scan
+ * (a spilled MEMORY_AND_DISK cache stores whole serialized batches, so a
+ * 2-column read of a wide cache pays full-width I/O).
  */
 class ValidationRun(spark: SparkSession, config: EngineConfig) {
   import spark.implicits._
@@ -206,7 +214,7 @@ class ValidationRun(spark: SparkSession, config: EngineConfig) {
         // legacy null hashes ride through max_by behind a sentinel (null
         // VALUE handling in max_by is an implementation detail not worth
         // depending on)
-        val legacy = " legacy"
+        val legacy = "\u0000legacy"
         df.groupBy($"part")
           .agg(max_by(coalesce($"rules_hash", lit(legacy)),
                       coalesce($"attempt_ts", lit(0L))).as("rules_hash"))
@@ -238,80 +246,44 @@ class ValidationRun(spark: SparkSession, config: EngineConfig) {
     }
     val todo = docs.where(partFilter($"part"))
 
+    // The one source decision for the global checks (class comment): on a
+    // full run they read the narrow frame. Uniqueness additionally needs its
+    // key to be the narrow id column unchanged — narrow stores doc_id CAST
+    // to string, the identity only for a string key; RI needs the spans.
+    val narrowSourced = done.isEmpty && limitParts.isEmpty &&
+      config.passthroughExprs.isEmpty
+    val uniqViaNarrow = narrowSourced && config.uniquenessKey.contains("doc_id") &&
+      docs.schema.exists(f => f.name == "doc_id" &&
+        f.dataType == org.apache.spark.sql.types.StringType)
+    val riViaNarrow = narrowSourced && docs.columns.contains("spans")
+
     // Row-level + span-level rules: ONE projection pass over the docs table,
-    // reduced to the narrow (doc_id, part, masks) shape and persisted so the
-    // violation artifact AND the verdict aggregation both derive from it —
-    // run() touches the docs table exactly 3 times total (rule pass,
-    // uniqueness key scan, RI media-span scan), guarded by GoldenEngineSpec.
+    // reduced to the narrow (doc_id, part, masks) shape from which the
+    // violation artifact and the verdict aggregation both derive. Ledger
+    // sketch inputs (one double / 8-byte hash per sketch per row) and RI's
+    // (media_ref, offset) pairs ride the same scan.
     val rowRules = config.rules.filterNot(r =>
-      r.spec.isInstanceOf[RuleSpec.Unique]) // Unique handled by salted agg below
-    // Referential-integrity refs ride the rule-pass scan too (r6): the RI
-    // check only needs each doc's (media_ref, offset) pairs, and the rule
-    // pass already decodes the spans column — extracting them there saves
-    // the dedicated full spans re-decode the r5 shape paid. Gated like the
-    // uniqueness sourcing below: full runs with a thin cache only (content
-    // passthroughs widen every cached row; see the measured negative result
-    // on the uniqueness gate). The refs array adds ~tens of bytes/row for
-    // the ~1-in-3 docs carrying media spans.
-    val riViaNarrow = assets.isDefined && config.checkReferentialIntegrity &&
-      done.isEmpty && limitParts.isEmpty && config.passthroughExprs.isEmpty &&
-      docs.columns.contains("spans")
+      r.spec.isInstanceOf[RuleSpec.Unique]) // Unique is the global check below
     val riRefsCol: Seq[org.apache.spark.sql.Column] =
-      if (riViaNarrow)
+      if (riViaNarrow && assets.isDefined && config.checkReferentialIntegrity)
         Seq(transform(filter(col("spans"), s => s.getField("media_ref").isNotNull),
           s => struct(s.getField("media_ref").as("media_ref"),
                       s.getField("offset").as("offset"))).as("__media_refs"))
       else Nil
-    // Ledger-sketch inputs ride the SAME scan as the rule pass (one double /
-    // one 8-byte hash per sketch per row in the narrow cache) — the --sketch
-    // flag costs zero extra scans of the docs table.
     val narrow = ValidationEngine.annotateNarrow(todo, rowRules, "doc_id", "part",
       sketchPassthroughCols ++ config.passthroughExprs ++ riRefsCol)
     val narrowP =
       if (config.persistAnnotations)
         narrow.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       else narrow
-    lastNarrow = if (config.persistAnnotations) Some(narrowP) else None
+    narrowFrame = Some(narrowP)
     val rowViolations = ValidationEngine.violationsFromNarrow(narrowP, rowRules)
 
-    // Scale-path checks producing extra violation rows.
-    //
-    // Uniqueness sourcing (r6): the r5 shape re-scanned the WIDE docs table
-    // twice more for uniqueness — once for the key scan feeding the salted
-    // dup-count agg and once as the probe side of the violation semi-join
-    // (stage-profiled at 8→32: together the worst-scaling stages of the
-    // engine leg). On a FULL run over the narrow id column, both passes are
-    // derivable from the narrow annotation instead — a 2-column pruned read
-    // of the already-persisted cache, zero extra decodes of the spans
-    // column. Falls back to the docs table when (a) resuming / limiting
-    // partitions (uniqueness is GLOBAL but narrow only covers in-scope
-    // partitions), (b) the key isn't the narrow id column, (c) the key
-    // column isn't already a string (narrow stores the CAST string; for
-    // string keys the cast is the identity, so grouping is unchanged), or
-    // (d) content passthroughs widen the cache: a MEMORY_AND_DISK cache
-    // whose partitions spill stores whole serialized batches, so a
-    // "2-column" read of a WIDE cache pays full-width I/O (measured: the
-    // content-carrying ScalingBench leg read 51.5 GB vs 22.1 GB and LOST
-    // wall at 32-wide, while the content-free headline leg dropped from
-    // ~630 to ~424 CPU-s). Thin cache -> use it; wide cache -> the pruned
-    // parquet re-scan stays the cheaper source.
-    val uniqSource: DataFrame = {
-      val keyIsNarrowId = config.uniquenessKey.contains("doc_id") &&
-        docs.schema.fields.exists(f => f.name == "doc_id" &&
-          f.dataType == org.apache.spark.sql.types.StringType)
-      // A dedicated thin (doc_id, part) cache for the content-passthrough
-      // case was ALSO tried this round (share one pruned scan between the
-      // two uniqueness passes) and reverted: the cache build's columnar
-      // compression cost ≈ the pruned parquet re-scan it saves, so the
-      // cleanest measured legs showed no win — the plain pruned scans stay.
-      if (keyIsNarrowId && done.isEmpty && limitParts.isEmpty &&
-          config.passthroughExprs.isEmpty)
-        narrowP.select($"doc_id", $"part")
-      else docs
-    }
     val extra = Seq(
-      config.uniquenessKey.map(k =>
-        UniquenessCheck.violations(uniqSource, k, "part").where(partFilter(col("part")))),
+      config.uniquenessKey.map { k =>
+        val src = if (uniqViaNarrow) narrowP.select($"doc_id", $"part") else docs
+        UniquenessCheck.violations(src, k, "part").where(partFilter(col("part")))
+      },
       assets.filter(_ => config.checkReferentialIntegrity).map { a =>
         if (riViaNarrow)
           ReferentialIntegrity.violationsFromRefs(
@@ -359,9 +331,13 @@ class ValidationRun(spark: SparkSession, config: EngineConfig) {
     (verdicts, allViolations)
   }
 
+  /** The narrow annotation frame of the last [[run]], persisted or not. */
+  private var narrowFrame: Option[DataFrame] = None
+
   /** The narrow annotation frame persisted by the last [[run]] (exposed for
     * plan-shape tests); released by [[unpersistAll]]. */
-  private[graft] var lastNarrow: Option[DataFrame] = None
+  private[graft] def lastNarrow: Option[DataFrame] =
+    narrowFrame.filter(_ => config.persistAnnotations)
 
 
   /** Per-row sketch inputs appended to the narrow annotation so ledger
@@ -376,29 +352,24 @@ class ValidationRun(spark: SparkSession, config: EngineConfig) {
     config.mgSketchExprs.toSeq.sortBy(_._1).map { case (n, c) =>
       c.cast("string").as(s"__mgv_$n") }
 
-  /** Per-partition ledger sketch frame `(part, sketches, hll_sketches, mg_sketches)`, or
-    * None when no sketch exprs are configured. Aggregates over the persisted
-    * narrow annotation when available (zero extra docs scans — plan-shape
-    * guarded); falls back to one column-pruned scan of the in-scope
-    * partitions when `persistAnnotations = false`. */
-  private[graft] def ledgerSketchFrame(
-      docs: DataFrame, inScopeParts: () => Seq[Int]): Option[DataFrame] = {
+  /** Per-partition ledger sketch frame `(part, sketches, hll_sketches,
+    * mg_sketches)` of the last [[run]], or None when no sketch exprs are
+    * configured. Aggregates the narrow frame, which holds exactly the
+    * in-scope sketch inputs: zero extra docs scans when it is persisted, one
+    * scan pruned to the inputs when it is not. */
+  private[graft] def ledgerSketchFrame(): Option[DataFrame] = {
     if (config.sketchExprs.isEmpty && config.hllSketchExprs.isEmpty &&
         config.mgSketchExprs.isEmpty) return None
     val kNames = config.sketchExprs.keys.toSeq.sorted
     val hNames = config.hllSketchExprs.keys.toSeq.sorted
     val mNames = config.mgSketchExprs.keys.toSeq.sorted
-    val base = lastNarrow.getOrElse {
-      docs.where($"part".isin(inScopeParts(): _*))
-        .select($"part".cast("int").as("part") +: sketchPassthroughCols: _*)
-    }
     val kll = graft.stats.Sketches.kllSketch()
     val hll = graft.stats.Sketches.hllSketch()
     val mg = graft.stats.Sketches.mgSketch()
     val aggs = kNames.map(n => kll(col(s"__skv_$n")).as(s"__sk_$n")) ++
                hNames.map(n => hll(col(s"__hll_$n")).as(s"__hsk_$n")) ++
                mNames.map(n => mg(col(s"__mgv_$n")).as(s"__msk_$n"))
-    val grouped = base.groupBy($"part").agg(aggs.head, aggs.tail: _*)
+    val grouped = narrowFrame.get.groupBy($"part").agg(aggs.head, aggs.tail: _*)
     val nullMap = lit(null).cast(
       org.apache.spark.sql.types.MapType(
         org.apache.spark.sql.types.StringType,
@@ -417,7 +388,7 @@ class ValidationRun(spark: SparkSession, config: EngineConfig) {
     * unpersist the violations frame they received). */
   def unpersistAll(): Unit = {
     lastNarrow.foreach(_.unpersist())
-    lastNarrow = None
+    narrowFrame = None
   }
 
   /** Execute + persist artifacts + ledger; resumable entry point.
@@ -482,9 +453,9 @@ class ValidationRun(spark: SparkSession, config: EngineConfig) {
         lit(attemptTs).as("attempt_ts"))
       // Optional per-partition sketches (north rule "drift over quantile
       // sketches" + SURVEY §2.11 persisted HLL): KLL quantile sketches and
-      // HLL distinct-count registers, aggregated from the PERSISTED narrow
-      // annotation (the sketch inputs rode the rule-pass scan) — zero extra
-      // scans of the docs table; merged across partitions/runs by
+      // HLL distinct-count registers, aggregated from the narrow annotation
+      // (the sketch inputs rode the rule-pass scan); merged across
+      // partitions/runs by
       // Drift.mergeLedgerSketches / Drift.mergeLedgerHll without re-scanning.
       // All THREE map columns (KLL / HLL / MG) are ALWAYS present (null when
       // unconfigured) so the ledger parquet schema is stable across runs
@@ -494,8 +465,7 @@ class ValidationRun(spark: SparkSession, config: EngineConfig) {
         org.apache.spark.sql.types.MapType(
           org.apache.spark.sql.types.StringType,
           org.apache.spark.sql.types.BinaryType))
-      val withSketches = ledgerSketchFrame(docs,
-          () => verdicts.select($"part").as[Int].collect().toSeq) match {
+      val withSketches = ledgerSketchFrame() match {
         case Some(sk) => ledger.join(sk, Seq("part"), "left")
         case None => ledger.withColumn("sketches", nullMap)
                            .withColumn("hll_sketches", nullMap)

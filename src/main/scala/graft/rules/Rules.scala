@@ -17,7 +17,7 @@ import graft.core.RuleSpec._
  *
  * Two rules are not expressible as a scalar projection:
  *  - [[RuleSpec.Unique]] needs per-value counts → window (small scale) or a
- *    salted two-level hash-aggregate + semi-join (scale path, see
+ *    hash-aggregate + semi-join (scale path, see
  *    [[graft.engine.UniquenessCheck]]);
  *  - [[RuleSpec.InColumn]] needs the distinct value set of another column →
  *    here a window-free `isin`-style membership via a self-join is avoided: we
@@ -133,7 +133,7 @@ object Rules {
   def helperInColumn(c: String, other: String): String = s"__in_${c}__$other"
 
   /** Small-scale helper: duplicate count via window (one shuffle on the key).
-    * The 10^12-scale path is the salted hash-agg in [[graft.engine]]. */
+    * The 10^12-scale path is the hash-agg in [[graft.engine]]. */
   def attachDupCount(df: DataFrame, c: String): DataFrame =
     df.withColumn(helperDupCount(c),
       count(lit(1)).over(Window.partitionBy(col(c))))

@@ -40,7 +40,7 @@ object ValidationEngine {
   private def maskCol(i: Int) = s"__mask_$i"
 
   /** Attach helper columns required by Unique / InColumn rules.
-    * Unique → window dup-count on the key (scale path: salted agg, see
+    * Unique → window dup-count on the key (scale path: hash-agg, see
     * [[graft.engine.UniquenessCheck]]). InColumn → left join against the
     * distinct value set of the other column (broadcast-ably small dictionaries
     * get picked up by AQE; `isin`-style membership without collect()). */

@@ -87,27 +87,26 @@ object Detector {
     // job 1 when the plan's size estimate is tiny; if job 1 then reports
     // more rows than 2×sampleRows (possible on very compact wide tables),
     // fall back to the proper sampled job — the discarded speculative agg
-    // cost at most a one-split scan. Rates are bit-identical either way.
+    // cost at most a one-split scan and is cancelled. Rates are
+    // bit-identical either way.
     val estBytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    val fFull =
-      if (estBytes < (16L << 20))
-        Some(scala.concurrent.Future(
-          df.agg(aggs.head, aggs.tail: _*).collect()(0))(
-          scala.concurrent.ExecutionContext.global))
-      else None
-    val cardRow = df.agg(cardAggs.head, cardAggs.tail: _*).collect()(0)
-    val fullRows = cardRow.getAs[Long]("__rows")
-    // Job 2: seeded cross-partition sample, every per-column rate in one agg.
-    val fraction = math.min(1.0,
-      if (fullRows == 0) 1.0 else 2.0 * sampleRows / fullRows)
-    val statRow = fFull match {
-      case Some(f) if fraction >= 1.0 =>
-        scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf)
-      case _ =>
-        val sample = df.sample(withReplacement = false, fraction, seed)
-        sample.agg(aggs.head, aggs.tail: _*).collect()(0)
+    val (cardRow, statRow) = graft.Par.scope { par =>
+      val full =
+        if (estBytes < (16L << 20)) Some(par.fork(df.agg(aggs.head, aggs.tail: _*).collect()(0)))
+        else None
+      val cardRow = df.agg(cardAggs.head, cardAggs.tail: _*).collect()(0)
+      val rows = cardRow.getAs[Long]("__rows")
+      // Job 2: seeded cross-partition sample, every per-column rate in one agg.
+      val fraction = math.min(1.0, if (rows == 0) 1.0 else 2.0 * sampleRows / rows)
+      (cardRow, full match {
+        case Some(f) if fraction >= 1.0 => f.join()
+        case _ =>
+          full.foreach(_.cancel())
+          df.sample(withReplacement = false, fraction, seed)
+            .agg(aggs.head, aggs.tail: _*).collect()(0)
+      })
     }
-    val rows = fullRows
+    val rows = cardRow.getAs[Long]("__rows")
 
     def rate(k: String): Double = {
       val i = statRow.fieldIndex(k)
@@ -433,26 +432,16 @@ object SemanticPipeline {
       SemanticCleaners.forType(c, meta.detectedType, region).map(t => (c, meta, t)) }
     val cleaned = transforms.foldLeft(df) { case (d, (c, _, t)) => d.withColumn(c, t) }
     // The four post-detection statistics (row count, before-issues,
-    // change-log counts, after-issues) are INDEPENDENT single-agg jobs that
-    // r5 ran back-to-back, so the pipeline's wall time was their sum; they
-    // now run concurrently from a small driver pool (guide §2.6). Each
-    // job's plan — and so each result — is unchanged.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-    try {
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration.Inf
-    val fTotal = Future(df.count())
-    val fBefore = Future(SemanticValidators.validate(df, typeMap, runTs))
-    val fAfter = Future(SemanticValidators.validate(cleaned, typeMap, runTs))
+    // change-log counts, after-issues) are INDEPENDENT single-agg jobs, run
+    // concurrently (guide §2.6). Each job's plan — and so each result — is
+    // unchanged.
     // ChangeLog per cleaned column (`types.py:37-42`, `cleaner.py` returns
     // one per operation): rows_changed = cells whose string form changed —
     // ONE agg over the input evaluating old vs new expression per column
-    val fChangeLogs: Future[Seq[ChangeLog]] = Future {
+    def changeLogs: Seq[ChangeLog] =
       if (transforms.isEmpty) Nil
       else {
-        val sentinel = " ∅"
+        val sentinel = "\u0000∅"
         val aggs = transforms.map { case (c, _, t) =>
           sum((coalesce(col(c).cast("string"), lit(sentinel)) =!=
                coalesce(t.cast("string"), lit(sentinel))).cast("long")).as(c) }
@@ -463,16 +452,11 @@ object SemanticPipeline {
             if (row.isNullAt(i)) 0L else row.getLong(i), Nil)
         }.filter(_.rows_changed > 0)
       }
-    }
-    val total = Await.result(fTotal, Inf)
-    val before = Await.result(fBefore, Inf)
-    val after = Await.result(fAfter, Inf)
-    val changeLogs = Await.result(fChangeLogs, Inf)
+    val (total, before, after, logs) = graft.Par(df.count(),
+      SemanticValidators.validate(df, typeMap, runTs),
+      SemanticValidators.validate(cleaned, typeMap, runTs), changeLogs)
     Result(cleaned, typeMap, before, after, Scorer.score(total, before),
-      Scorer.score(total, after), changeLogs)
-    // finally (not success-path-only): a failing job must not leak the
-    // non-daemon pool threads (review r6)
-    } finally pool.shutdown()
+      Scorer.score(total, after), logs)
   }
 
   /** The EP3 report artifact, matching `report_demo_data.json`'s shape:

@@ -95,12 +95,9 @@ object Metrics {
     val aggs = count(lit(1)).as("__rows") +: df.columns.map(c => distinctAgg(c).as(c))
     // distinct agg and duplicate-row count are independent jobs — overlap
     // them (guide §2.6); results unchanged
-    val fDup = scala.concurrent.Future(Profiler.duplicateRowCount(df))(
-      scala.concurrent.ExecutionContext.global)
-    val r = df.agg(aggs.head, aggs.tail: _*).collect()(0)
+    val (dupRows, r) = graft.Par(Profiler.duplicateRowCount(df),
+      df.agg(aggs.head, aggs.tail: _*).collect()(0))
     val rows = r.getAs[Long]("__rows")
-    val dupRows = scala.concurrent.Await.result(fDup,
-      scala.concurrent.duration.Duration.Inf)
     val per = df.columns.map(c =>
       c -> (if (rows == 0) 100.0 else r.getAs[Long](c) * 100.0 / rows)).toMap
     Uniqueness(if (rows == 0) 0 else dupRows * 100.0 / rows, per)
@@ -188,22 +185,10 @@ object Metrics {
     * report's wall time is the slowest scan, not the sum; every job's plan
     * and result is unchanged. */
   def qualityReport(df: DataFrame, reference: Option[(DataFrame, String)] = None): (QualityDimensions, Double) = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-    try {
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration.Inf
-      val fComp = Future(completeness(df))
-      val fVc = Future(validityAndConsistency(df))
-      val fUniq = Future(uniqueness(df))
-      val fAcc = reference.map { case (ref, key) => Future(accuracy(df, ref, key)) }
-      val comp = Await.result(fComp, Inf)
-      val (valid, consist) = Await.result(fVc, Inf)
-      val uniq = Await.result(fUniq, Inf)
-      val acc = fAcc.flatMap(f => Await.result(f, Inf))
-      val dims = QualityDimensions(comp, valid, consist, uniq, acc)
-      (dims, overallScore(dims))
-    } finally pool.shutdown() // a failing job must not leak pool threads
+    val (comp, (valid, consist), uniq, acc) = graft.Par(completeness(df),
+      validityAndConsistency(df), uniqueness(df),
+      reference.flatMap { case (ref, key) => accuracy(df, ref, key) })
+    val dims = QualityDimensions(comp, valid, consist, uniq, acc)
+    (dims, overallScore(dims))
   }
 }

@@ -18,7 +18,7 @@ import graft.rules.{BoundRule, ValidationEngine}
  * Scope and honest limits:
  *  - Row-level + span-level rules only. GLOBAL rules are fundamentally
  *    different on a stream: uniqueness over an unbounded key set is
- *    unbounded state (use the batch engine's salted agg per completed
+ *    unbounded state (use the batch engine's uniqueness agg per completed
  *    partition, or a watermarked `dropDuplicates`); referential integrity
  *    needs a stream-static join against the asset catalog — provided here
  *    via [[violationsStream]]'s optional `assets` argument (stream-static
@@ -46,7 +46,7 @@ object StreamingValidation {
     }
     require(unsupported.isEmpty,
       s"rules ${unsupported.mkString(", ")} need global/table-wide state; " +
-      "use the batch engine (salted agg) or watermarked dropDuplicates")
+      "use the batch engine (uniqueness agg) or watermarked dropDuplicates")
   }
 
   /** Violation rows from a streaming docs frame — append-mode friendly
@@ -70,7 +70,7 @@ object StreamingValidation {
     * horizon (keys older than `watermark` are evicted), so this is the
     * keep-first analogue for ingestion pipelines, NOT the batch
     * `duplicated(keep=False)` global rule (that one needs the full key set
-    * and runs in the batch engine's salted agg). */
+    * and runs in the batch engine's uniqueness agg). */
   def dedupStream(stream: DataFrame, keyCol: String, eventTimeCol: String,
                   watermark: String = "10 minutes"): DataFrame =
     stream.withWatermark(eventTimeCol, watermark)

@@ -71,6 +71,15 @@ class ComponentsSpec extends SparkSpec {
         .as[(Long, Long)].collect().toMap
       assert(distributed === unionFindComponents(edges))
     }
+    // mixed int/long ids: both paths widen to bigint (the driver path once
+    // typed its output from the int column and failed to encode the rows)
+    val mixed = Seq((1, 2L), (2, 3L), (10, 11L)).toDF("id_a", "id_b")
+    Seq(100000L, 0L).foreach { limit =>
+      val cc = Components.connectedComponents(mixed, smallEdgeLimit = limit)
+      assert(cc.schema.map(_.dataType.simpleString) === Seq("bigint", "bigint"))
+      assert(cc.as[(Long, Long)].collect().toMap ===
+        unionFindComponents(Seq((1L, 2L), (2L, 3L), (10L, 11L))))
+    }
   }
 
   test("convergence costs at most 2 actions per round (checksum, not count+count+except)") {

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.core._
 import graft.core.RuleSpec._
@@ -120,17 +121,7 @@ class GoldenEngineSpec extends SparkSpec {
     val run = new ValidationRun(spark, cfg)
     val (_, viols) = run.run(docs, None, limitParts = Some(Seq(1)))
     viols.count() // finalize the adaptive plan
-    import org.apache.spark.sql.execution.FileSourceScanExec
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    // collect() stops at AdaptiveSparkPlanExec and at the violations cache
-    // (run() caches the violations union): recurse through both wrappers
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-    def scans(p: org.apache.spark.sql.execution.SparkPlan): Seq[FileSourceScanExec] =
-      p.collect { case f: FileSourceScanExec => Seq(f)
-                  case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
-                  case im: InMemoryTableScanExec => scans(im.relation.cachedPlan)
-                }.flatten
-    val ss = scans(viols.queryExecution.executedPlan)
+    val ss = PlanCensus.fileScans(viols.queryExecution.executedPlan)
     assert(ss.nonEmpty)
     ss.foreach { s =>
       assert(s.partitionFilters.nonEmpty,
@@ -343,7 +334,7 @@ class GoldenEngineSpec extends SparkSpec {
     val (verdicts, viols) = run.run(pq, Some(Fixtures.assets(spark)))
     viols.count() // materialize the narrow cache
     import org.apache.spark.sql.execution.datasources.LogicalRelation
-    val sk = run.ledgerSketchFrame(pq, () => Seq(0, 1, 2, 3)).get
+    val sk = run.ledgerSketchFrame().get
     val scans = sk.queryExecution.optimizedPlan.collect {
       case l: LogicalRelation => l }.size
     assert(scans === 0,
@@ -411,23 +402,12 @@ class GoldenEngineSpec extends SparkSpec {
     // scans + RI re-decode of the spans column)
     assert(run.lastNarrow.isDefined)
     assert(parquetScans(run.lastNarrow.get.queryExecution.analyzed) === 1)
-    // physical scan census INSIDE the cached violations plan: recurse
-    // through AQE wrappers but NOT into InMemoryTableScan (reads of the
-    // narrow cache are exactly the point) — no branch may re-touch parquet
-    locally {
-      import org.apache.spark.sql.execution.FileSourceScanExec
-      import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-      import org.apache.spark.sql.execution.columnar.InMemoryRelation
-      def physScans(p: org.apache.spark.sql.execution.SparkPlan): Int =
-        p.collect { case _: FileSourceScanExec => 1
-                    case a: AdaptiveSparkPlanExec => physScans(a.executedPlan) }.sum
-      val cached = viols.queryExecution.optimizedPlan.collectFirst {
-        case im: InMemoryRelation => im.cachedPlan }
-      assert(cached.isDefined, "violations should be cached")
-      assert(physScans(cached.get) === 0,
-        s"violations must derive entirely from the narrow cache on a full " +
-        s"run (uniqueness AND referential integrity):\n${cached.get}")
-    }
+    // physical scan census of the EXECUTED verdicts plan, through the
+    // cached violations and the narrow cache: the narrow cache's rule pass
+    // must be the only parquet read (uniqueness AND referential integrity)
+    verdicts.collect()
+    val scans = PlanCensus.fileScans(verdicts.queryExecution.executedPlan)
+    assert(scans.size === 1, scans.map(_.simpleString(200)).mkString("\n"))
     viols.unpersist(); run.unpersistAll()
   }
 
@@ -531,5 +511,94 @@ class GoldenEngineSpec extends SparkSpec {
     val res = ValidationEngine.validate(docs, rowRules, strictMode = true)
     assert(res.report.count() === 5)
     assert(res.report.filter($"_val_status" === "FAIL").count() === 0)
+  }
+
+  test("duplicateKeys plans exactly one shuffle (one hash-aggregate, no salt level)") {
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    val dups = UniquenessCheck.duplicateKeys(Fixtures.docsPq(spark, 2000, 4), "doc_id")
+    val shuffles = PlanCensus.nodes(dups.queryExecution.executedPlan)
+      .collect { case e: ShuffleExchangeLike => e }
+    assert(shuffles.size === 1, dups.queryExecution.executedPlan.toString)
+    // the golden key set: "dup-1" twice; null and blank ids are not dups
+    assert(UniquenessCheck.duplicateKeys(docs, "doc_id").as[(String, Long)]
+      .collect().toSeq === Seq(("dup-1", 2L)))
+  }
+
+  test("persistAnnotations=false: only the rule pass and RI decode spans, other narrow reads are id-only") {
+    val pq = Fixtures.docsPq(spark, 2000, 4)
+    val run = new ValidationRun(spark,
+      EngineConfig(rules = rowRules, persistAnnotations = false))
+    val (verdicts, viols) = run.run(pq, Some(Fixtures.assets(spark)))
+    assert(run.lastNarrow.isEmpty)
+    verdicts.collect()
+    val scans = PlanCensus.fileScans(verdicts.queryExecution.executedPlan)
+    val (spans, idOnly) = scans.partition(s => PlanCensus.columns(s)("spans"))
+    val census = scans.map(_.simpleString(200)).mkString("\n")
+    assert(spans.size === 2, census) // rule pass + RI refs
+    // uniqueness key scan, semi-join probe, verdict aggregation
+    assert(idOnly.size === 3, census)
+    idOnly.foreach(s => assert(PlanCensus.columns(s).subsetOf(Set("doc_id", "part")), census))
+    viols.unpersist()
+  }
+
+  test("source table: where uniqueness and RI read from, per run shape and key type") {
+    val work = java.nio.file.Files.createTempDirectory("graft-sources").toString
+    val pq = Fixtures.docsPq(spark, 2000, 4)
+    val keys = Seq("string doc_id" -> pq, "long doc_id" -> pq.withColumn("doc_id", xxhash64($"doc_id")))
+    val cfg = EngineConfig(rules = rowRules)
+    // (uniqueness docs scans, RI docs scans); 0 means the check read the
+    // narrow cache. Uniqueness off the docs table is a key scan + a probe.
+    val shapes = Seq[(String, Boolean => (Int, Int), (DataFrame, ValidationRun) => (DataFrame, DataFrame))](
+      ("full run", str => if (str) (0, 0) else (2, 0), (d, r) => r.run(d, Some(assets))),
+      ("resume", _ => (2, 1), (d, r) => {
+        val dir = java.nio.file.Files.createTempDirectory(java.nio.file.Paths.get(work), "r").toString
+        val runL = new ValidationRun(spark, cfg.copy(ledgerDir = Some(dir)))
+        runL.runAndWrite(d, Some(assets), s"$dir/out", limitParts = Some(Seq(0)))
+        runL.run(d, Some(assets), resume = true)
+      }),
+      ("limitParts", _ => (2, 1), (d, r) => r.run(d, Some(assets), limitParts = Some(Seq(1, 2)))),
+      ("passthroughs", _ => (2, 1), (d, _) =>
+        new ValidationRun(spark, cfg.copy(passthroughExprs = Seq(size($"spans").as("__n"))))
+          .run(d, Some(assets))))
+    for ((shape, expected, go) <- shapes; (keyName, d) <- keys) {
+      val (verdicts, viols) = go(d, new ValidationRun(spark, cfg))
+      verdicts.collect()
+      val scans = PlanCensus.fileScans(verdicts.queryExecution.executedPlan)
+      val (spans, idOnly) = scans.partition(s => PlanCensus.columns(s)("spans"))
+      assert((idOnly.size, spans.size - 1) === expected(keyName.startsWith("string")),
+        s"$shape × $keyName:\n" + scans.map(_.simpleString(200)).mkString("\n"))
+      viols.unpersist()
+    }
+    spark.catalog.clearCache()
+  }
+
+  test("persistAnnotations=false writes the same ledger rows as true") {
+    val pq = Fixtures.docsPq(spark, 3000, 4)
+    def ledger(persist: Boolean): Map[Int, org.apache.spark.sql.Row] = {
+      val dir = java.nio.file.Files.createTempDirectory("graft-ledger-p").toString
+      new ValidationRun(spark, EngineConfig(rules = rowRules, ledgerDir = Some(dir),
+          runId = "p", persistAnnotations = persist,
+          sketchExprs = Map("n_spans" -> size($"spans").cast("double")),
+          hllSketchExprs = Map("doc_id" -> $"doc_id"),
+          mgSketchExprs = Map("first_kind" -> try_element_at($"spans.kind", lit(1)))))
+        .runAndWrite(pq, Some(assets), s"$dir/out")
+      spark.read.parquet(s"$dir/ledger").collect()
+        .map(r => r.getAs[Int]("part") -> r).toMap
+    }
+    def sketches(r: org.apache.spark.sql.Row, c: String) =
+      r.getMap[String, Array[Byte]](r.fieldIndex(c)).toMap
+    val (cached, pruned) = (ledger(true), ledger(false))
+    assert(cached.keySet === Set(0, 1, 2, 3) && pruned.keySet === cached.keySet)
+    for ((p, a) <- cached; b = pruned(p)) {
+      for (c <- Seq("status", "total_rows", "failed_rows", "violations"))
+        assert(a.getAs[Any](c) === b.getAs[Any](c), s"part $p $c")
+      assert(sketches(a, "hll_sketches").view.mapValues(_.toSeq).toMap ===
+             sketches(b, "hll_sketches").view.mapValues(_.toSeq).toMap)
+      import graft.stats.Sketches.{KllSketch, MgSketch}
+      assert(sketches(a, "sketches").view.mapValues(KllSketch.fromBytes(_).count).toMap ===
+             sketches(b, "sketches").view.mapValues(KllSketch.fromBytes(_).count).toMap)
+      assert(sketches(a, "mg_sketches").view.mapValues(MgSketch.fromBytes(_).total).toMap ===
+             sketches(b, "mg_sketches").view.mapValues(MgSketch.fromBytes(_).total).toMap)
+    }
   }
 }
