@@ -149,12 +149,14 @@ case class EngineConfig(
  *
  * Reads of the docs table (pinned by a scan census in GoldenEngineSpec): a
  * full run — nothing skipped by resume, no `limitParts`, no content
- * passthroughs — sources uniqueness (key scan + semi-join probe), RI refs,
- * the verdict aggregation and the ledger sketches from the narrow rule-pass
- * frame. With the frame persisted the docs table is decoded once; without,
- * each of those reads is a column-pruned scan (see
- * [[EngineConfig.persistAnnotations]]). Other runs read the uniqueness key
- * twice and the RI spans once more from the docs table itself: uniqueness is
+ * passthroughs — sources RI refs, the verdict aggregation and the ledger
+ * sketches from the narrow rule-pass frame, and uniqueness (key scan +
+ * semi-join probe) too when the key is a string `doc_id` (narrow stores the
+ * id cast to string). With the frame persisted and a string key the docs
+ * table is decoded once; unpersisted, each narrow read is a column-pruned
+ * scan (see [[EngineConfig.persistAnnotations]]). Uniqueness on any other
+ * key, and on other runs, reads the key twice from the docs table itself, and
+ * other runs decode the RI spans once more from it: uniqueness is
  * global but the narrow frame covers only in-scope partitions, and a
  * passthrough-widened cache costs more to re-read than a pruned parquet scan
  * (a spilled MEMORY_AND_DISK cache stores whole serialized batches, so a
