@@ -1,6 +1,6 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core._
 import graft.rules.{BoundRule, ValidationEngine}
@@ -12,11 +12,10 @@ object UniquenessCheck {
   /**
    * Global uniqueness of `key` over its non-null values (an embedded
    * uniqueness constraint): one hash-aggregate, `(key, dup_count)` for keys
-   * seen more than once. Hot keys are skew-safe without salting: the
-   * aggregate combines map-side, so each task ships at most one partial
-   * count per distinct key, and AQE coalesces or splits the shuffle
-   * partitions. Null keys are not uniqueness violations (they violate
-   * Required instead).
+   * seen more than once. No salt: the partial aggregate combines map-side,
+   * so each map task ships at most one partial count per distinct key. That
+   * is the only skew relief — see [[violations]] for the probe side. Null
+   * keys are not uniqueness violations (they violate Required instead).
    */
   def duplicateKeys(df: DataFrame, key: String): DataFrame =
     df.where(col(key).isNotNull)
@@ -28,7 +27,10 @@ object UniquenessCheck {
     * against the duplicate-key set. The set scales with the duplication RATE
     * (≈1 M keys at 40 M docs on the bench fixture), so it is hash-joined on
     * the shuffled key — a forced broadcast would collect it to the driver
-    * and build the hash relation single-threaded. */
+    * and build the hash relation single-threaded. AQE does not split this
+    * join for a hot key: its build side is the aggregate over its shuffle
+    * stage, not a bare stage, so every row of one key goes to one probe
+    * task. */
   def violations(df: DataFrame, key: String, partCol: String,
                  ruleId: String = "unique(doc_id)"): DataFrame = {
     val dups = duplicateKeys(df, key)
@@ -40,37 +42,40 @@ object UniquenessCheck {
   }
 }
 
+/** media_ref → asset catalog check (SURVEY J4, north rule). */
 object ReferentialIntegrity {
-  /**
-   * media_ref → asset catalog check (SURVEY J4, north rule). Explodes media
-   * spans only (text spans never join), left-anti joins the catalog.
-   * Catalyst/AQE picks broadcast vs sort-merge from the catalog size; pass
-   * `broadcastCatalog=true` to force the hint when the caller knows it's small.
-   */
-  def violations(docs: DataFrame, assets: DataFrame,
-                 broadcastCatalog: Boolean = false): DataFrame = {
-    val refs = docs.select(
-        col("doc_id"), col("part"),
-        explode(filter(col("spans"), s => s.getField("media_ref").isNotNull)).as("s"))
-      .select(col("doc_id"), col("part"),
-              col("s.media_ref").as("media_ref"),
-              col("s.offset").as("span_offset"))
-    violationsFromRefs(refs, assets, broadcastCatalog)
-  }
+  private val RefsCol = "__media_refs"
 
-  /** The anti-join half of [[violations]], for a caller that already holds
-    * the exploded `(doc_id, part, media_ref, span_offset)` reference rows —
-    * the engine extracts them on the rule-pass scan so RI costs no second
-    * decode of the spans column. */
-  def violationsFromRefs(refs: DataFrame, assets: DataFrame,
-                         broadcastCatalog: Boolean = false): DataFrame = {
-    val cat = if (broadcastCatalog) broadcast(assets) else assets
-    refs.join(cat, refs("media_ref") === cat("asset_id"), "left_anti")
+  /** A docs row's media references, `array<struct<media_ref, offset>>` over
+    * the `spans` column; text spans never join, so only spans carrying a
+    * media_ref are kept. The engine appends this column to its rule-pass
+    * projection, so RI reads the spans on the rule pass's scan. */
+  def refs: Column =
+    transform(filter(col("spans"), s => s.getField("media_ref").isNotNull),
+      s => struct(s.getField("media_ref").as("media_ref"),
+                  s.getField("offset").as("offset"))).as(RefsCol)
+
+  /** RI violations of a docs table: its [[refs]] exploded, then
+    * [[violationsFromRefs]]. */
+  def violations(docs: DataFrame, assets: DataFrame): DataFrame =
+    violationsFromRefs(explodeRefs(docs.select(col("doc_id"), col("part"), refs)), assets)
+
+  /** One `(doc_id, part, media_ref, span_offset)` row per reference of a
+    * frame holding `doc_id`, `part` and the [[refs]] column. */
+  private[engine] def explodeRefs(df: DataFrame): DataFrame =
+    df.select(col("doc_id"), col("part"), explode(col(RefsCol)).as("s"))
+      .select(col("doc_id"), col("part"), col("s.media_ref").as("media_ref"),
+              col("s.offset").as("span_offset"))
+
+  /** The anti-join half of [[violations]] over exploded reference rows.
+    * Catalyst/AQE picks broadcast vs shuffle from the catalog's measured
+    * size. */
+  def violationsFromRefs(refs: DataFrame, assets: DataFrame): DataFrame =
+    refs.join(assets, refs("media_ref") === assets("asset_id"), "left_anti")
       .select(lit("referential_integrity(media_ref)").as("rule_id"),
               col("doc_id").cast("string").as("doc_id"), col("part"),
               col("span_offset").cast("int").as("span_offset"),
               concat(lit("dangling media_ref "), col("media_ref")).as("detail"))
-  }
 }
 
 /** Driver-side attempt clock for ledger rows: wall-clock millis, bumped to
@@ -91,7 +96,9 @@ private[engine] object AttemptClock {
 case class EngineConfig(
     rules: Seq[BoundRule],
     checkReferentialIntegrity: Boolean = true,
-    uniquenessKey: Option[String] = Some("doc_id"),
+    /** Global uniqueness of `doc_id` over its non-null values — the column
+      * the violation rows and the verdict join key on. */
+    checkUniqueness: Boolean = true,
     ledgerDir: Option[String] = None,
     runId: String = "run-0",
     /** Persist the narrow per-row annotation (id, part, rule masks) so the
@@ -100,8 +107,9 @@ case class EngineConfig(
       * the narrow frame shouldn't be spilled (10^12 rows ≈ tens of TB), set
       * false for zero cache: every later read of the narrow frame is then a
       * column-pruned re-scan — on a full run three id-only scans (uniqueness
-      * key scan, semi-join probe, verdict aggregation), one `spans` decode
-      * for RI and one scan of the ledger-sketch inputs. */
+      * key scan, semi-join probe, verdict aggregation), one scan of the
+      * ledger-sketch inputs, and for RI the same column-pruned `spans` scan
+      * a docs-table RI read would be. */
     persistAnnotations: Boolean = true,
     /** Numeric expressions sketched per partition into the ledger as KLL
       * quantile sketches (name → column expr over the docs table), feeding
@@ -147,23 +155,27 @@ case class EngineConfig(
  * + one groupBy(part) aggregate (2 Spark jobs total), NOT a driver loop over
  * partitions. Only resume bookkeeping is per-partition.
  *
- * Reads of the docs table (pinned by a scan census in GoldenEngineSpec): a
- * full run — nothing skipped by resume, no `limitParts`, no content
- * passthroughs — sources RI refs, the verdict aggregation and the ledger
- * sketches from the narrow rule-pass frame, and uniqueness (key scan +
- * semi-join probe) too when the key is a string `doc_id` (narrow stores the
- * id cast to string). With the frame persisted and a string key the docs
- * table is decoded once; unpersisted, each narrow read is a column-pruned
- * scan (see [[EngineConfig.persistAnnotations]]). Uniqueness on any other
- * key, and on other runs, reads the key twice from the docs table itself, and
- * other runs decode the RI spans once more from it: uniqueness is
- * global but the narrow frame covers only in-scope partitions, and a
- * passthrough-widened cache costs more to re-read than a pruned parquet scan
- * (a spilled MEMORY_AND_DISK cache stores whole serialized batches, so a
- * 2-column read of a wide cache pays full-width I/O).
+ * Reads of the docs table (pinned by a scan census in GoldenEngineSpec).
+ * RI always reads the narrow rule-pass frame: its media refs are a column
+ * of the rule-pass projection. So do the verdict aggregation and the ledger
+ * sketches. Uniqueness holds the only source decision: it is global, while
+ * the narrow frame covers only in-scope partitions, so it reads the narrow
+ * frame only on a full run — nothing skipped by resume, no `limitParts`, no
+ * content passthroughs — with a string `doc_id` (narrow stores the id cast
+ * to string); otherwise it reads the key twice (key scan + semi-join probe)
+ * from the docs table. A passthrough-widened cache costs more to re-read
+ * than a pruned parquet scan (a spilled MEMORY_AND_DISK cache stores whole
+ * serialized batches). With the frame persisted, a full run with a string
+ * key decodes the docs table once; unpersisted, each narrow read is a
+ * column-pruned scan (see [[EngineConfig.persistAnnotations]]).
  */
 class ValidationRun(spark: SparkSession, config: EngineConfig) {
   import spark.implicits._
+
+  private val badUnique = config.rules.map(_.spec).collect {
+    case u: RuleSpec.Unique if u.column != "doc_id" => u.ruleId }
+  require(badUnique.isEmpty, s"${badUnique.mkString(", ")}: the engine checks " +
+    "uniqueness on doc_id only (checkUniqueness); use ValidationEngine.validate")
 
   private def ledgerPath(run: String) = config.ledgerDir.map(d => s"$d/ledger")
 
@@ -187,7 +199,11 @@ class ValidationRun(spark: SparkSession, config: EngineConfig) {
   }
   private[graft] def rulesHash: String = {
     val canon = config.rules.map(r => s"${canonSpec(r.spec)}|${r.reason}").sorted
-      .mkString(";") + s"|uniq=${config.uniquenessKey}|ri=${config.checkReferentialIntegrity}"
+      .mkString(";") +
+      // rendered as the former `Option[String]` key field, so ledgers
+      // written before `checkUniqueness` stay resumable
+      s"|uniq=${if (config.checkUniqueness) "Some(doc_id)" else "None"}" +
+      s"|ri=${config.checkReferentialIntegrity}"
     java.lang.Long.toHexString(
       graft.functions.Hashing.md5_60(canon.getBytes("UTF-8")))
   }
@@ -248,32 +264,17 @@ class ValidationRun(spark: SparkSession, config: EngineConfig) {
     }
     val todo = docs.where(partFilter($"part"))
 
-    // The one source decision for the global checks (class comment): on a
-    // full run they read the narrow frame. Uniqueness additionally needs its
-    // key to be the narrow id column unchanged — narrow stores doc_id CAST
-    // to string, the identity only for a string key; RI needs the spans.
-    val narrowSourced = done.isEmpty && limitParts.isEmpty &&
-      config.passthroughExprs.isEmpty
-    val uniqViaNarrow = narrowSourced && config.uniquenessKey.contains("doc_id") &&
-      docs.schema.exists(f => f.name == "doc_id" &&
-        f.dataType == org.apache.spark.sql.types.StringType)
-    val riViaNarrow = narrowSourced && docs.columns.contains("spans")
-
     // Row-level + span-level rules: ONE projection pass over the docs table,
     // reduced to the narrow (doc_id, part, masks) shape from which the
     // violation artifact and the verdict aggregation both derive. Ledger
     // sketch inputs (one double / 8-byte hash per sketch per row) and RI's
-    // (media_ref, offset) pairs ride the same scan.
+    // media refs ride the same scan.
     val rowRules = config.rules.filterNot(r =>
       r.spec.isInstanceOf[RuleSpec.Unique]) // Unique is the global check below
-    val riRefsCol: Seq[org.apache.spark.sql.Column] =
-      if (riViaNarrow && assets.isDefined && config.checkReferentialIntegrity)
-        Seq(transform(filter(col("spans"), s => s.getField("media_ref").isNotNull),
-          s => struct(s.getField("media_ref").as("media_ref"),
-                      s.getField("offset").as("offset"))).as("__media_refs"))
-      else Nil
+    val catalog = assets.filter(_ => config.checkReferentialIntegrity)
     val narrow = ValidationEngine.annotateNarrow(todo, rowRules, "doc_id", "part",
-      sketchPassthroughCols ++ config.passthroughExprs ++ riRefsCol)
+      sketchPassthroughCols ++ config.passthroughExprs ++
+        catalog.map(_ => ReferentialIntegrity.refs))
     val narrowP =
       if (config.persistAnnotations)
         narrow.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -281,25 +282,26 @@ class ValidationRun(spark: SparkSession, config: EngineConfig) {
     narrowFrame = Some(narrowP)
     val rowViolations = ValidationEngine.violationsFromNarrow(narrowP, rowRules)
 
+    // The one source decision (class comment): uniqueness reads the narrow
+    // frame only on a full run with a string doc_id — narrow stores doc_id
+    // CAST to string, the identity only for a string key.
+    val uniqViaNarrow = done.isEmpty && limitParts.isEmpty &&
+      config.passthroughExprs.isEmpty &&
+      docs.schema.exists(f => f.name == "doc_id" &&
+        f.dataType == org.apache.spark.sql.types.StringType)
     val extra = Seq(
-      config.uniquenessKey.map { k =>
+      Option.when(config.checkUniqueness) {
         val src = if (uniqViaNarrow) narrowP.select($"doc_id", $"part") else docs
-        UniquenessCheck.violations(src, k, "part").where(partFilter(col("part")))
+        UniquenessCheck.violations(src, "doc_id", "part").where(partFilter(col("part")))
       },
-      assets.filter(_ => config.checkReferentialIntegrity).map { a =>
-        if (riViaNarrow)
-          ReferentialIntegrity.violationsFromRefs(
-            narrowP.select($"doc_id", $"part",
-                explode($"__media_refs").as("s"))
-              .select($"doc_id", $"part", $"s.media_ref".as("media_ref"),
-                      $"s.offset".as("span_offset")), a)
-        else ReferentialIntegrity.violations(todo, a)
-      }
+      catalog.map(a => ReferentialIntegrity.violationsFromRefs(
+        ReferentialIntegrity.explodeRefs(narrowP), a))
     ).flatten
     // Violations are tiny relative to the input; cache so the verdict
     // aggregation and the artifact write evaluate the scan+rules once, not
-    // twice. (Unpersisted by runAndWrite; harmless to leave for ad-hoc use.)
+    // twice. Released by unpersistAll.
     val allViolations = (rowViolations +: extra).reduce(_.unionByName(_)).cache()
+    violationsFrame = Some(allViolations)
 
     // Per-partition verdicts: rows whose (doc_id, part) has ANY violation are
     // failed. Row-accurate even for null/duplicated ids: a null-coalesced key
@@ -319,7 +321,10 @@ class ValidationRun(spark: SparkSession, config: EngineConfig) {
       // threshold, and legs where AQE picked broadcast built a multi-million
       // row hash relation single-threaded (10× wall, 45× GC — the bimodal
       // bench episodes). SHUFFLE_HASH pins the scale-correct plan: hash-join
-      // on the shuffled key, no sort, no driver-side relation.
+      // on the shuffled key, no sort, no driver-side relation. AQE does not
+      // split it for a hot key (the build side is the distinct aggregate over
+      // its shuffle stage, not a bare stage): only that aggregate's partial
+      // combines map-side, and every row of one key goes to one probe task.
       .join(badKeys.hint("shuffle_hash"), Seq("__k", "part"), "left")
       .groupBy("part")
       .agg(count(lit(1)).as("total_rows"),
@@ -335,6 +340,8 @@ class ValidationRun(spark: SparkSession, config: EngineConfig) {
 
   /** The narrow annotation frame of the last [[run]], persisted or not. */
   private var narrowFrame: Option[DataFrame] = None
+  /** The violations frame the last [[run]] cached. */
+  private var violationsFrame: Option[DataFrame] = None
 
   /** The narrow annotation frame persisted by the last [[run]] (exposed for
     * plan-shape tests); released by [[unpersistAll]]. */
@@ -386,11 +393,13 @@ class ValidationRun(spark: SparkSession, config: EngineConfig) {
       mMap.as("mg_sketches")))
   }
 
-  /** Release every frame persisted by the last [[run]] (callers additionally
-    * unpersist the violations frame they received). */
+  /** Release every frame the last [[run]] persisted: the narrow frame and
+    * the violations it returned. */
   def unpersistAll(): Unit = {
     lastNarrow.foreach(_.unpersist())
+    violationsFrame.foreach(_.unpersist())
     narrowFrame = None
+    violationsFrame = None
   }
 
   /** Execute + persist artifacts + ledger; resumable entry point.
@@ -476,7 +485,6 @@ class ValidationRun(spark: SparkSession, config: EngineConfig) {
       withSketches.write.mode(SaveMode.Append).parquet(lp)
     }
     verdicts.unpersist()
-    viols.unpersist()
     unpersistAll()
   }
 }

@@ -287,8 +287,6 @@ case class SpanChecks(child: Expression) extends UnaryExpression with DirectEval
     val arr = v.asInstanceOf[ArrayData]
     val n = arr.numElements()
     if (n == 0) return InternalRow(null, null, true)
-    val spanType = child.dataType.asInstanceOf[ArrayType]
-      .elementType.asInstanceOf[StructType]
     var monoBad: Any = null
     var fieldBad: Any = null
     var prevOffset = Int.MinValue
@@ -303,7 +301,7 @@ case class SpanChecks(child: Expression) extends UnaryExpression with DirectEval
         val off = if (row.isNullAt(3)) Int.MinValue else row.getInt(3)
         if (monoBad == null && i > 0 && off <= prevOffset) monoBad = off
         if (fieldBad == null) {
-          val isText = kind != null && kind.toString == "text"
+          val isText = kind == SpanChecks.Text
           val bad = if (isText) !hasText || hasRef else !hasRef || hasText
           if (bad) fieldBad = off
         }
@@ -314,6 +312,9 @@ case class SpanChecks(child: Expression) extends UnaryExpression with DirectEval
     InternalRow(monoBad, fieldBad, false)
   }
   override protected def withNewChildInternal(c: Expression): SpanChecks = copy(c)
+}
+object SpanChecks {
+  private val Text = UTF8String.fromString("text")
 }
 
 /** One-pass whitespace-token statistics.

@@ -118,15 +118,6 @@ object Rules {
     if (df.columns.contains(spanHelper(c))) df
     else df.withColumn(spanHelper(c), graft.functions.F.spanChecks(col(c)))
 
-  /** Per-span field-consistency predicate (true = span is inconsistent). */
-  def spanInconsistent(s: Column): Column = {
-    val kind = s.getField("kind")
-    val text = s.getField("text")
-    val ref = s.getField("media_ref")
-    when(kind === "text", text.isNull || ref.isNotNull)
-      .otherwise(ref.isNull || text.isNotNull)
-  }
-
   /** Name of the helper count column the engine attaches for a Unique rule. */
   def helperDupCount(c: String): String = s"__dupcnt_$c"
   /** Name of the helper membership column for an InColumn rule. */

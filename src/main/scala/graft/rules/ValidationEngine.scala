@@ -143,7 +143,7 @@ object ValidationEngine {
   }
 
   /** Violation rows from an [[annotateNarrow]] frame: failing rows explode
-    * their failing-rule structs. */
+    * one struct per rule, and the failing ones are kept. */
   def violationsFromNarrow(narrow: DataFrame, rules: Seq[BoundRule]): DataFrame = {
     val perRule: Seq[Column] = rules.zipWithIndex.map { case (r, i) =>
       struct(
@@ -155,7 +155,8 @@ object ValidationEngine {
     narrow
       .filter(col(StatusCol) === "FAIL")
       .select(col("doc_id"), col("part"),
-              explode(filter(array(perRule: _*), v => v.getField("failed"))).as("v"))
+              explode(array(perRule: _*)).as("v"))
+      .where(col("v.failed"))
       .select(col("v.rule_id").as("rule_id"), col("doc_id"), col("part"),
               col("v.span_offset").as("span_offset"), col("v.detail").as("detail"))
   }

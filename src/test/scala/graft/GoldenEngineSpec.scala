@@ -116,7 +116,7 @@ class GoldenEngineSpec extends SparkSpec {
     graft.fixtures.Fixtures.docs(spark, 2000, 4)
       .write.partitionBy("part").mode("overwrite").parquet(dir)
     val docs = spark.read.parquet(dir)
-    val cfg = EngineConfig(rules = rowRules, uniquenessKey = None,
+    val cfg = EngineConfig(rules = rowRules, checkUniqueness = false,
       checkReferentialIntegrity = false, persistAnnotations = false)
     val run = new ValidationRun(spark, cfg)
     val (_, viols) = run.run(docs, None, limitParts = Some(Seq(1)))
@@ -436,6 +436,36 @@ class GoldenEngineSpec extends SparkSpec {
            hashOf(Seq(BoundRule(NoFutureDate("d", ts2)))))
   }
 
+  test("rulesHash is pinned: ledgers written by earlier versions stay resumable") {
+    val ts = new java.sql.Timestamp(1767225600000L) // 2026-01-01T00:00:00Z
+    val rules = Seq(BoundRule(Required("doc_id")), BoundRule(NoFutureDate("created_at", ts)),
+      BoundRule(SpanOffsetsMonotonic()),
+      BoundRule(NumericRange("score", 0, 1), Some("score out of range")))
+    def hashOf(uniq: Boolean) = new ValidationRun(spark,
+      EngineConfig(rules = rules, checkUniqueness = uniq)).rulesHash
+    assert(hashOf(true) === "27691aadd0a1da9")
+    assert(hashOf(false) === "f1125722057a42d")
+  }
+
+  test("the engine rejects Unique on any column but doc_id") {
+    val ex = intercept[IllegalArgumentException] {
+      new ValidationRun(spark, EngineConfig(rules = rowRules :+ BoundRule(Unique("part"))))
+    }
+    assert(ex.getMessage.contains("unique(part)"))
+    new ValidationRun(spark, EngineConfig(rules = rowRules :+ BoundRule(Unique("doc_id"))))
+  }
+
+  test("unpersistAll releases the narrow frame and the violations run() cached") {
+    val run = new ValidationRun(spark, EngineConfig(rules = rowRules))
+    val (_, viols) = run.run(docs, Some(assets))
+    viols.count()
+    val narrow = run.lastNarrow.get
+    import org.apache.spark.storage.StorageLevel.NONE
+    assert(viols.storageLevel != NONE && narrow.storageLevel != NONE)
+    run.unpersistAll()
+    assert(viols.storageLevel === NONE && narrow.storageLevel === NONE)
+  }
+
   test("ledger latest-attempt wins: re-validated partitions neither double-weight sketches nor resurrect stale trust") {
     val dir = java.nio.file.Files.createTempDirectory("graft-ledger-la").toString
     val pq = Fixtures.docsPq(spark, 3000, 4)
@@ -536,7 +566,7 @@ class GoldenEngineSpec extends SparkSpec {
     val cfg = EngineConfig(rules = rowRules)
     // (id-only parquet scans, spans decodes besides the rule pass's). A read
     // of the persisted narrow cache is no scan; uniqueness off the docs
-    // table is a key scan + a probe, RI off it one more spans decode.
+    // table is a key scan + a probe. RI always reads the narrow frame.
     val shapes = Seq[(String, Boolean => (Int, Int), (DataFrame, ValidationRun) => (DataFrame, DataFrame))](
       ("full run", str => if (str) (0, 0) else (2, 0), (d, r) => r.run(d, Some(assets))),
       // unpersisted narrow reads are column-pruned scans: the uniqueness key
@@ -545,14 +575,14 @@ class GoldenEngineSpec extends SparkSpec {
       // spans once more
       ("full run, unpersisted", _ => (3, 1), (d, _) =>
         new ValidationRun(spark, cfg.copy(persistAnnotations = false)).run(d, Some(assets))),
-      ("resume", _ => (2, 1), (d, r) => {
+      ("resume", _ => (2, 0), (d, r) => {
         val dir = java.nio.file.Files.createTempDirectory(java.nio.file.Paths.get(work), "r").toString
         val runL = new ValidationRun(spark, cfg.copy(ledgerDir = Some(dir)))
         runL.runAndWrite(d, Some(assets), s"$dir/out", limitParts = Some(Seq(0)))
         runL.run(d, Some(assets), resume = true)
       }),
-      ("limitParts", _ => (2, 1), (d, r) => r.run(d, Some(assets), limitParts = Some(Seq(1, 2)))),
-      ("passthroughs", _ => (2, 1), (d, _) =>
+      ("limitParts", _ => (2, 0), (d, r) => r.run(d, Some(assets), limitParts = Some(Seq(1, 2)))),
+      ("passthroughs", _ => (2, 0), (d, _) =>
         new ValidationRun(spark, cfg.copy(passthroughExprs = Seq(size($"spans").as("__n"))))
           .run(d, Some(assets))))
     for ((shape, expected, go) <- shapes; (keyName, d) <- keys) {

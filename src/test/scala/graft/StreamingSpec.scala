@@ -39,7 +39,7 @@ class StreamingSpec extends SparkSpec {
     // batch reference: same rules, same input, uniqueness off (global state
     // is the batch engine's job — see StreamingValidation scaladoc)
     val run = new engine.ValidationRun(spark,
-      engine.EngineConfig(rules = rowRules, uniquenessKey = None))
+      engine.EngineConfig(rules = rowRules, checkUniqueness = false))
     val (_, batchViols) = run.run(Fixtures.goldenDocsDf(spark), Some(assets))
     val want = batchViols.select($"rule_id", $"doc_id").as[(String, String)]
       .collect()
