@@ -55,27 +55,25 @@ object ReferentialIntegrity {
       s => struct(s.getField("media_ref").as("media_ref"),
                   s.getField("offset").as("offset"))).as(RefsCol)
 
-  /** RI violations of a docs table: its [[refs]] exploded, then
-    * [[violationsFromRefs]]. */
+  /** RI violations of a docs table: [[violationsFromRefs]] over its
+    * [[refs]]. */
   def violations(docs: DataFrame, assets: DataFrame): DataFrame =
-    violationsFromRefs(explodeRefs(docs.select(col("doc_id"), col("part"), refs)), assets)
+    violationsFromRefs(docs.select(col("doc_id"), col("part"), refs), assets)
 
-  /** One `(doc_id, part, media_ref, span_offset)` row per reference of a
-    * frame holding `doc_id`, `part` and the [[refs]] column. */
-  private[engine] def explodeRefs(df: DataFrame): DataFrame =
-    df.select(col("doc_id"), col("part"), explode(col(RefsCol)).as("s"))
-      .select(col("doc_id"), col("part"), col("s.media_ref").as("media_ref"),
-              col("s.offset").as("span_offset"))
-
-  /** The anti-join half of [[violations]] over exploded reference rows.
+  /** RI violations of a frame holding `doc_id`, `part` and the [[refs]]
+    * column: one row per reference, anti-joined against the catalog.
     * Catalyst/AQE picks broadcast vs shuffle from the catalog's measured
     * size. */
-  def violationsFromRefs(refs: DataFrame, assets: DataFrame): DataFrame =
-    refs.join(assets, refs("media_ref") === assets("asset_id"), "left_anti")
+  def violationsFromRefs(df: DataFrame, assets: DataFrame): DataFrame = {
+    val refRows = df.select(col("doc_id"), col("part"), explode(col(RefsCol)).as("s"))
+      .select(col("doc_id"), col("part"), col("s.media_ref").as("media_ref"),
+              col("s.offset").as("span_offset"))
+    refRows.join(assets, refRows("media_ref") === assets("asset_id"), "left_anti")
       .select(lit("referential_integrity(media_ref)").as("rule_id"),
               col("doc_id").cast("string").as("doc_id"), col("part"),
               col("span_offset").cast("int").as("span_offset"),
               concat(lit("dangling media_ref "), col("media_ref")).as("detail"))
+  }
 }
 
 /** Driver-side attempt clock for ledger rows: wall-clock millis, bumped to
@@ -168,6 +166,11 @@ case class EngineConfig(
  * serialized batches). With the frame persisted, a full run with a string
  * key decodes the docs table once; unpersisted, each narrow read is a
  * column-pruned scan (see [[EngineConfig.persistAnnotations]]).
+ *
+ * Skew: the verdicts are one aggregation whose partial combines a hot
+ * `doc_id` map-side. The uniqueness semi-join is the one place where every
+ * row of a hot id still lands on one probe task (see
+ * [[UniquenessCheck.violations]]).
  */
 class ValidationRun(spark: SparkSession, config: EngineConfig) {
   import spark.implicits._
@@ -294,8 +297,7 @@ class ValidationRun(spark: SparkSession, config: EngineConfig) {
         val src = if (uniqViaNarrow) narrowP.select($"doc_id", $"part") else docs
         UniquenessCheck.violations(src, "doc_id", "part").where(partFilter(col("part")))
       },
-      catalog.map(a => ReferentialIntegrity.violationsFromRefs(
-        ReferentialIntegrity.explodeRefs(narrowP), a))
+      catalog.map(a => ReferentialIntegrity.violationsFromRefs(narrowP, a))
     ).flatten
     // Violations are tiny relative to the input; cache so the verdict
     // aggregation and the artifact write evaluate the scan+rules once, not
@@ -303,32 +305,19 @@ class ValidationRun(spark: SparkSession, config: EngineConfig) {
     val allViolations = (rowViolations +: extra).reduce(_.unionByName(_)).cache()
     violationsFrame = Some(allViolations)
 
-    // Per-partition verdicts: rows whose (doc_id, part) has ANY violation are
-    // failed. Row-accurate even for null/duplicated ids: a null-coalesced key
-    // joined against the (small) distinct violating-key set, then ONE
-    // aggregate producing totals and failure counts together (r2 ran a
-    // separate totals scan plus a semi-join re-scan of the docs table here).
-    val nullKey = "\u0000<null>"
-    val badKeys = allViolations
-      .select(coalesce($"doc_id", lit(nullKey)).as("__k"), $"part").distinct()
-      .withColumn("__hit", lit(true))
-    val verdicts = narrowP
-      .select(coalesce($"doc_id", lit(nullKey)).as("__k"), $"part")
-      // The violating-key set scales with the violation RATE (millions of
-      // rows at 40 M docs / 8% dirt), so its size is unbounded — never let
-      // the planner broadcast it. Round 1 left this to AQE "sized
-      // generously"; profiling showed the estimate hovering around the
-      // threshold, and legs where AQE picked broadcast built a multi-million
-      // row hash relation single-threaded (10× wall, 45× GC — the bimodal
-      // bench episodes). SHUFFLE_HASH pins the scale-correct plan: hash-join
-      // on the shuffled key, no sort, no driver-side relation. AQE does not
-      // split it for a hot key (the build side is the distinct aggregate over
-      // its shuffle stage, not a bare stage): only that aggregate's partial
-      // combines map-side, and every row of one key goes to one probe task.
-      .join(badKeys.hint("shuffle_hash"), Seq("__k", "part"), "left")
+    // Per-partition verdicts: rows whose (doc_id, part) key carries ANY
+    // violation fail (null ids share one key). One aggregation, no join:
+    // rule-pass keys (n = 1) and violation keys (n = 0, bad) are unioned and
+    // reduced per key, so a hot key combines map-side in the partial
+    // aggregate; a second aggregate per part gives totals and failures.
+    def keys(df: DataFrame, n: Long, bad: Boolean) =
+      df.select(coalesce($"doc_id", lit("\u0000<null>")).as("__k"), $"part",
+        lit(n).as("n"), lit(bad).as("bad"))
+    val verdicts = keys(narrowP, 1L, bad = false).unionByName(keys(allViolations, 0L, bad = true))
+      .groupBy("__k", "part").agg(sum($"n").as("n"), max($"bad").as("bad"))
       .groupBy("part")
-      .agg(count(lit(1)).as("total_rows"),
-           sum(coalesce($"__hit", lit(false)).cast("long")).as("failed_docs"))
+      .agg(sum($"n").as("total_rows"),
+           sum(when($"bad", $"n").otherwise(0L)).as("failed_docs"))
       .select($"part",
         $"total_rows",
         ($"total_rows" - $"failed_docs").as("passed"),
@@ -417,19 +406,15 @@ class ValidationRun(spark: SparkSession, config: EngineConfig) {
     val t0 = System.nanoTime()
     val (verdicts, viols) = run(docs, assets, resume, limitParts)
     // fresh runs truncate everything (static overwrite); resumed/partial runs
-    // replace only the partitions present in this attempt's output
-    val prevMode = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode",
-      if (resume || limitParts.nonEmpty) "dynamic" else "static")
-    val mode = SaveMode.Overwrite
-    try {
-      viols.write.mode(mode).partitionBy("part").parquet(s"$outDir/violations")
-      verdicts.cache()
-      verdicts.write.mode(mode).partitionBy("part").parquet(s"$outDir/verdicts")
-    } finally prevMode match {
-      case Some(m) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", m)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
+    // replace only the partitions present in this attempt's output. A
+    // per-write option, so runs sharing a session cannot see each other's.
+    val overwrite = if (resume || limitParts.nonEmpty) "dynamic" else "static"
+    def write(df: DataFrame, name: String): Unit =
+      df.write.mode(SaveMode.Overwrite).option("partitionOverwriteMode", overwrite)
+        .partitionBy("part").parquet(s"$outDir/$name")
+    write(viols, "violations")
+    verdicts.cache()
+    write(verdicts, "verdicts")
     ledgerPath(config.runId).foreach { lp =>
       val wallMs = (System.nanoTime() - t0) / 1000000
       // Attempt ordering must survive a wall clock stepping BACKWARD between

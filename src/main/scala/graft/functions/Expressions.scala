@@ -233,7 +233,7 @@ trait DirectEvalCodegen extends UnaryExpression {
 
 /** [[DirectEvalCodegen]] for TOTAL unary expressions — those that handle a
   * null child themselves and never return null (`SpanChecks`: null spans →
-  * (null, null, is_empty=true); `SpanTextConcat`: null spans → ""). The
+  * is_empty = true; `SpanTextConcat`: null spans → ""). The
   * expression implements [[evalChild]] over the raw (possibly null) child
   * value; interpreted eval and generated code share it. */
 trait DirectEvalCodegenTotal extends UnaryExpression {
@@ -273,43 +273,53 @@ trait DirectEvalCodegenBinary extends BinaryExpression {
 }
 
 /** Span-rule checks in ONE pass over the spans array.
-  * Output: struct(mono_bad_offset INT (null = ok), field_bad_offset INT
-  * (null = ok), is_empty BOOLEAN). Null input ⇒ (null, null, true).
+  * Output: struct(mono_bad BOOLEAN, mono_bad_offset INT, field_bad BOOLEAN,
+  * field_bad_offset INT, is_empty BOOLEAN); an offset is the first offending
+  * span's, null when that span's offset is null. Null or empty input ⇒
+  * (false, null, false, null, true). As in the q30/q31 oracle, a null offset
+  * compares as Int.MinValue and a null element is a span whose fields are
+  * all null (so field-inconsistent).
   * Mirrors Rules.SpanOffsetsMonotonic / SpanFieldConsistency / SpansNonEmpty. */
 case class SpanChecks(child: Expression) extends UnaryExpression with DirectEvalCodegenTotal {
   override protected def resultJavaType: String = "org.apache.spark.sql.catalyst.InternalRow"
   override def dataType: DataType = StructType(Seq(
+    StructField("mono_bad", BooleanType, nullable = false),
     StructField("mono_bad_offset", IntegerType, nullable = true),
+    StructField("field_bad", BooleanType, nullable = false),
     StructField("field_bad_offset", IntegerType, nullable = true),
     StructField("is_empty", BooleanType, nullable = false)))
   override def evalChild(v: Any): Any = {
-    if (v == null) return InternalRow(null, null, true)
+    if (v == null) return InternalRow(false, null, false, null, true)
     val arr = v.asInstanceOf[ArrayData]
     val n = arr.numElements()
-    if (n == 0) return InternalRow(null, null, true)
-    var monoBad: Any = null
-    var fieldBad: Any = null
+    if (n == 0) return InternalRow(false, null, false, null, true)
+    var monoBad, fieldBad = false
+    var monoOff, fieldOff: Any = null
     var prevOffset = Int.MinValue
     var i = 0
-    while (i < n && (monoBad == null || fieldBad == null)) {
-      val row = arr.getStruct(i, 4)
-      if (row != null) {
-        // fields: kind(0), text(1), media_ref(2), offset(3)
-        val kind = if (row.isNullAt(0)) null else row.getUTF8String(0)
-        val hasText = !row.isNullAt(1)
-        val hasRef = !row.isNullAt(2)
-        val off = if (row.isNullAt(3)) Int.MinValue else row.getInt(3)
-        if (monoBad == null && i > 0 && off <= prevOffset) monoBad = off
-        if (fieldBad == null) {
-          val isText = kind == SpanChecks.Text
-          val bad = if (isText) !hasText || hasRef else !hasRef || hasText
-          if (bad) fieldBad = off
-        }
-        prevOffset = off
+    while (i < n && !(monoBad && fieldBad)) {
+      val row = if (arr.isNullAt(i)) null else arr.getStruct(i, 4)
+      // fields: kind(0), text(1), media_ref(2), offset(3)
+      val kind = if (row == null || row.isNullAt(0)) null else row.getUTF8String(0)
+      val hasText = row != null && !row.isNullAt(1)
+      val hasRef = row != null && !row.isNullAt(2)
+      val offNull = row == null || row.isNullAt(3)
+      val off = if (offNull) Int.MinValue else row.getInt(3)
+      if (!monoBad && i > 0 && off <= prevOffset) {
+        monoBad = true
+        if (!offNull) monoOff = off
       }
+      if (!fieldBad) {
+        val isText = kind == SpanChecks.Text
+        if (if (isText) !hasText || hasRef else !hasRef || hasText) {
+          fieldBad = true
+          if (!offNull) fieldOff = off
+        }
+      }
+      prevOffset = off
       i += 1
     }
-    InternalRow(monoBad, fieldBad, false)
+    InternalRow(monoBad, monoOff, fieldBad, fieldOff, false)
   }
   override protected def withNewChildInternal(c: Expression): SpanChecks = copy(c)
 }

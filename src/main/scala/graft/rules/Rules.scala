@@ -103,9 +103,9 @@ object Rules {
     // Catalyst expression, attached by ValidationEngine.withHelperColumns) —
     // a single tight loop per row instead of three interpreted HOF trees.
     case SpanOffsetsMonotonic(c) =>
-      col(spanHelper(c)).getField("mono_bad_offset").isNotNull
+      col(spanHelper(c)).getField("mono_bad")
     case SpanFieldConsistency(c) =>
-      col(spanHelper(c)).getField("field_bad_offset").isNotNull
+      col(spanHelper(c)).getField("field_bad")
     case SpansNonEmpty(c) =>
       col(spanHelper(c)).getField("is_empty")
   }

@@ -168,8 +168,9 @@ object ValidationEngine {
                  idCol: String, partCol: String): DataFrame =
     violationsFromNarrow(annotateNarrow(df, rules, idCol, partCol), rules)
 
-  /** Offset of the first offending span for span-level rules; null otherwise
-    * (read from the shared SpanChecks helper struct). */
+  /** Offset of the first offending span for span-level rules; null when
+    * that span's offset is null and for every other rule (read from the
+    * shared SpanChecks helper struct). */
   private def offendingOffset(spec: RuleSpec): Column = spec match {
     case SpanOffsetsMonotonic(c) =>
       col(Rules.spanHelper(c)).getField("mono_bad_offset")

@@ -416,6 +416,101 @@ class GoldenEngineSpec extends SparkSpec {
     viols.unpersist(); run.unpersistAll()
   }
 
+  test("verdicts are one aggregation: no join outside the cached violations, two exchanges") {
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val run = new ValidationRun(spark, EngineConfig(rules = rowRules))
+    val (verdicts, _) = run.run(Fixtures.docsPq(spark, 2000, 4), Some(Fixtures.assets(spark)))
+    verdicts.collect()
+    val plan = verdicts.queryExecution.executedPlan
+    val own = PlanCensus.nodes(plan, intoCaches = false)
+    assert(own.collect { case j: BaseJoinExec => j }.isEmpty, plan.toString)
+    // one exchange per aggregation: by (doc_id key, part), then by part
+    assert(own.collect { case e: ShuffleExchangeLike => e }.size === 2, plan.toString)
+    run.unpersistAll()
+  }
+
+  test("verdicts at the edges equal the oracle's shared-fate rule per (part, doc_id)") {
+    // q30: a row fails when any row with its (part, coalesce(doc_id, NUL))
+    // key has a violation. Edges: an id duplicated inside one part, null
+    // ids in two parts, rows whose part is null, an id in two parts.
+    val ok = Seq(Span("text", "x", null, 0))
+    val empty = Seq.empty[Span]
+    val edge = Seq[(String, Seq[Span], Option[Int])](
+      ("dup", ok, Some(0)), ("dup", empty, Some(0)), ("solo", ok, Some(0)),
+      (null, ok, Some(0)), (null, empty, Some(0)), (null, ok, Some(1)),
+      ("x1", ok, Some(1)), ("x1", ok, Some(2)), ("y", empty, Some(2)), ("z", ok, Some(2)),
+      ("np", ok, None), ("np", empty, None), ("np2", ok, None))
+      .toDF("doc_id", "spans", "part")
+    def oracle(rules: Seq[BoundRule], uniq: Boolean): Seq[(Any, Long, Long, Long, String)] = {
+      import org.apache.spark.sql.expressions.Window
+      val dup = if (!uniq) lit(false)
+        else $"doc_id".isNotNull && count(lit(1)).over(Window.partitionBy($"doc_id")) > 1
+      ValidationEngine.validate(edge, rules).report
+        .withColumn("bad", $"_val_status" === "FAIL" || dup)
+        .withColumn("gv", max($"bad").over(
+          Window.partitionBy($"part", coalesce($"doc_id", lit("\u0000")))))
+        .groupBy($"part").agg(count(lit(1)).as("t"), sum($"gv".cast("long")).as("f"))
+        .collect().map(r => (r.get(0), r.getLong(1), r.getLong(1) - r.getLong(2),
+          r.getLong(2), if (r.getLong(2) > 0) "FAIL" else "PASS")).toSeq
+    }
+    val suites = Seq(rowRules -> true, rowRules.tail -> false) // tail: no Required
+    for ((rules, uniq) <- suites) {
+      val run = new ValidationRun(spark, EngineConfig(rules = rules, checkUniqueness = uniq))
+      val (verdicts, _) = run.run(edge)
+      val got = verdicts.select("part", "total_rows", "passed", "failed", "status")
+        .collect().map(r => (r.get(0), r.getLong(1), r.getLong(2), r.getLong(3),
+          r.getString(4))).toSeq
+      val want = oracle(rules, uniq)
+      assert(got.toSet === want.toSet, s"uniq=$uniq")
+      // the null part is a verdict group of its own, and its "np" pair
+      // fails together, as in q30
+      assert(got.exists(v => v._1 == null && v._4 >= 2), got.toString)
+      run.unpersistAll()
+    }
+    // without Required and uniqueness, shared fate fails rows that carry
+    // no violation of their own: "dup", the part-0 null id and "np"
+    val lone = ValidationEngine.validate(edge, rowRules.tail).failed
+    assert(oracle(rowRules.tail, uniq = false).map(_._4).sum === lone + 3)
+  }
+
+  test("runAndWrite never changes the session's partitionOverwriteMode, fresh or resumed") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val seen = new java.util.concurrent.ConcurrentHashMap[Int, String]()
+    // a job's properties carry the session's SQL confs as they were when
+    // the job was submitted ("" = unset)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.put(e.jobId, Option(e.properties).flatMap(p => Option(p.getProperty(key))).getOrElse(""))
+    }
+    val dir = java.nio.file.Files.createTempDirectory("graft-overwrite").toString
+    val cfg = EngineConfig(rules = rowRules, ledgerDir = Some(s"$dir/l"), runId = "ow")
+    val before = spark.conf.getOption(key)
+    val group = s"overwrite-${System.nanoTime()}"
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "overwrite-mode probe")
+    try {
+      new ValidationRun(spark, cfg.copy(ledgerDir = None)).runAndWrite(docs, Some(assets), s"$dir/fresh")
+      val run = new ValidationRun(spark, cfg)
+      run.runAndWrite(docs, Some(assets), s"$dir/out", limitParts = Some(Seq(0)))
+      run.runAndWrite(docs, Some(assets), s"$dir/out", resume = true)
+    } finally sc.clearJobGroup()
+    val ids = sc.statusTracker.getJobIdsForGroup(group)
+    val deadline = System.nanoTime() + 30000000000L
+    while (!ids.forall(seen.containsKey) && System.nanoTime() < deadline) Thread.sleep(20)
+    sc.removeSparkListener(listener)
+    assert(ids.length > 10 && ids.forall(seen.containsKey))
+    val modes = ids.map(seen.get).distinct
+    assert(modes.length === 1, modes.mkString(", "))
+    assert(spark.conf.getOption(key) === before)
+    // the writes still took their modes: the resume replaced only part 1
+    for (out <- Seq("fresh", "out"))
+      assert(spark.read.parquet(s"$dir/$out/verdicts").select("part").as[Int]
+        .collect().toSet === Set(0, 1), out)
+  }
+
   test("rulesHash changes when only a rule PARAMETER changes (same ruleId)") {
     // ADVICE r4: ids like numeric_range(x) omit their bounds, so a
     // parameter-only edit must still flip the fingerprint

@@ -34,32 +34,37 @@ class SpanChecksSpec extends SparkSpec {
         }
     }
 
-  /** The kernel's semantics with HOFs: null elements are skipped (the
-    * first-element exemption still goes by array index), a null offset
-    * compares and reports as Int.MinValue, and each check keeps its first
-    * offending offset. */
+  /** The q30/q31 oracle's span rules (`OracleSql.docFlags`) with HOFs: a
+    * null offset compares as Int.MinValue, a null element is a span whose
+    * fields are all null (so field-inconsistent), and each check keeps its
+    * first offending span's offset, null when that offset is null. */
   private def reference(spans: Column): Column = {
-    val init = struct(lit(Int.MinValue).as("prev"), lit(null).cast("int").as("mono"),
-      lit(null).cast("int").as("field"), lit(0).as("i"))
+    val init = struct(lit(Int.MinValue).as("prev"),
+      lit(false).as("mb"), lit(null).cast("int").as("mo"),
+      lit(false).as("fb"), lit(null).cast("int").as("fo"), lit(0).as("i"))
     val folded = aggregate(spans, init, (acc, s) => {
       val off = coalesce(s.getField("offset"), lit(Int.MinValue))
       val isText = coalesce(s.getField("kind") === "text", lit(false))
-      val bad = when(isText, s.getField("text").isNull || s.getField("media_ref").isNotNull)
+      val field = when(isText, s.getField("text").isNull || s.getField("media_ref").isNotNull)
         .otherwise(s.getField("media_ref").isNull || s.getField("text").isNotNull)
-      val next = acc.getField("i") + 1
-      when(s.isNull, struct(acc.getField("prev").as("prev"), acc.getField("mono").as("mono"),
-          acc.getField("field").as("field"), next.as("i")))
-        .otherwise(struct(off.as("prev"),
-          coalesce(acc.getField("mono"),
-            when(acc.getField("i") > 0 && off <= acc.getField("prev"), off)).as("mono"),
-          coalesce(acc.getField("field"), when(bad, off)).as("field"),
-          next.as("i")))
+      val mono = acc.getField("i") > 0 && off <= acc.getField("prev")
+      struct(off.as("prev"),
+        (acc.getField("mb") || mono).as("mb"),
+        when(!acc.getField("mb") && mono, s.getField("offset"))
+          .otherwise(acc.getField("mo")).as("mo"),
+        (acc.getField("fb") || field).as("fb"),
+        when(!acc.getField("fb") && field, s.getField("offset"))
+          .otherwise(acc.getField("fo")).as("fo"),
+        (acc.getField("i") + 1).as("i"))
     })
     when(spans.isNull || size(spans) === 0,
-        struct(lit(null).cast("int").as("mono_bad_offset"),
-          lit(null).cast("int").as("field_bad_offset"), lit(true).as("is_empty")))
-      .otherwise(struct(folded.getField("mono").as("mono_bad_offset"),
-        folded.getField("field").as("field_bad_offset"), lit(false).as("is_empty")))
+        struct(lit(false).as("mono_bad"), lit(null).cast("int").as("mono_bad_offset"),
+          lit(false).as("field_bad"), lit(null).cast("int").as("field_bad_offset"),
+          lit(true).as("is_empty")))
+      .otherwise(struct(folded.getField("mb").as("mono_bad"),
+        folded.getField("mo").as("mono_bad_offset"),
+        folded.getField("fb").as("field_bad"),
+        folded.getField("fo").as("field_bad_offset"), lit(false).as("is_empty")))
   }
 
   test("spanChecks equals the HOF reference on generated spans") {
@@ -77,9 +82,11 @@ class SpanChecksSpec extends SparkSpec {
     assert(diff.isEmpty, diff.take(5).mkString("\n"))
     // the generator reaches every edge the kernel branches on
     val ks = got.map(_.getStruct(1))
-    assert(ks.count(_.getBoolean(2)) > 0)
-    assert(ks.count(k => !k.isNullAt(0)) > 0 && ks.count(k => !k.isNullAt(1)) > 0)
-    assert(ks.count(k => !k.isNullAt(0) && k.getInt(0) == Int.MinValue) > 0)
+    assert(ks.count(_.getBoolean(4)) > 0)
+    assert(ks.count(k => !k.isNullAt(1)) > 0 && ks.count(k => !k.isNullAt(3)) > 0)
+    // offending spans whose offset is null report null, not a sentinel
+    assert(ks.count(k => k.getBoolean(0) && k.isNullAt(1)) > 0)
+    assert(ks.count(k => k.getBoolean(2) && k.isNullAt(3)) > 0)
     assert(rows.exists(r => r.getSeq[Row](1) != null && r.getSeq[Row](1).contains(null)))
   }
 }

@@ -31,13 +31,14 @@ object PlanCensus {
   import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
   import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 
-  def nodes(plan: SparkPlan): Seq[SparkPlan] = {
+  /** Every node of `plan`; with `intoCaches = false` a cache read is a leaf. */
+  def nodes(plan: SparkPlan, intoCaches: Boolean = true): Seq[SparkPlan] = {
     val seen = java.util.Collections.newSetFromMap(
       new java.util.IdentityHashMap[SparkPlan, java.lang.Boolean])
     def go(p: SparkPlan): Seq[SparkPlan] = p.flatMap {
       case a: AdaptiveSparkPlanExec => go(a.executedPlan)
       case q: QueryStageExec => go(q.plan)
-      case im: InMemoryTableScanExec if seen.add(im.relation.cachedPlan) =>
+      case im: InMemoryTableScanExec if intoCaches && seen.add(im.relation.cachedPlan) =>
         im +: go(im.relation.cachedPlan)
       case n => Seq(n)
     }
