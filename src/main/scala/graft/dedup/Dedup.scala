@@ -363,14 +363,11 @@ object Dedup {
     * keys + O(candidates), never O(Σ prefix²/bucket).
     *
     * Every call logs the analytic S-curve recall at the requested threshold
-    * (zero extra jobs); `telemetry = true` additionally COUNTS the candidate
-    * and verified pair sets (two extra jobs — audit runs only) so the
-    * realized candidate volume is in the log next to the estimate. */
+    * (zero extra jobs). */
   def ngramJaccardPairsViaMinhash(df: DataFrame, textCol: String, idCol: String,
                                   shingleK: Int = 3, minJaccard: Double = 0.3,
                                   portable: Boolean = true,
-                                  k: Int = 48, bands: Int = 24,
-                                  telemetry: Boolean = false): DataFrame = {
+                                  k: Int = 48, bands: Int = 24): DataFrame = {
     val r = k / bands
     val recallAtT = sCurveRecall(minJaccard, r, bands)
     val recallAt09 = sCurveRecall(0.9, r, bands)
@@ -394,7 +391,7 @@ object Dedup {
     // arrays are distinct sets ⇒ |∪| = nₐ + n_b − |∩| exactly (no second
     // hash-set pass per pair; same arithmetic as the exact path)
     val inter = size(array_intersect(col("sh_a"), col("sh_b"))).cast("double")
-    val verified = cands.join(sa, "id_a").join(sb, "id_b")
+    cands.join(sa, "id_a").join(sb, "id_b")
       // relative epsilon keeps the length prune strictly conservative at
       // exact-threshold pairs (same rounding case as the exact path's filter)
       .where(least(col("n_a"), col("n_b")).cast("double") >=
@@ -402,13 +399,6 @@ object Dedup {
       .select(col("id_a"), col("id_b"),
         (inter / (col("n_a") + col("n_b") - inter)).as("jaccard"))
       .where(col("jaccard") >= minJaccard)
-    if (telemetry) {
-      val nCand = cands.count(); val nVer = verified.count()
-      System.err.println(
-        f"[graft.dedup] banded-minhash jaccard telemetry: candidates=$nCand " +
-        f"verified=$nVer (precision after exact verify: 1.0 by construction)")
-    }
-    verified
   }
 
   // ------------------------------------------------- embedding near-dup

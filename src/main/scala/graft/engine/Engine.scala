@@ -222,7 +222,11 @@ class ValidationRun(spark: SparkSession, config: EngineConfig) {
     * hash check (ADVICE r4: trusting a stale matching-hash row after the
     * artifacts were rewritten under a different suite). Rows with a
     * `rules_hash` different from the current config are NOT treated as
-    * complete; legacy rows without either column are trusted (ts = 0). */
+    * complete; legacy rows without either column are trusted (ts = 0).
+    * A null-`part` row (docs with a null `part` form a verdict group of their
+    * own) never marks anything complete: `run` re-validates those docs on
+    * every resume. Only a missing ledger means "nothing completed"; any
+    * other read failure propagates. */
   def completedPartitions(): Set[Int] = ledgerPath(config.runId) match {
     case Some(p) =>
       try {
@@ -239,10 +243,11 @@ class ValidationRun(spark: SparkSession, config: EngineConfig) {
         df.groupBy($"part")
           .agg(max_by(coalesce($"rules_hash", lit(legacy)),
                       coalesce($"attempt_ts", lit(0L))).as("rules_hash"))
-          .where($"rules_hash" === legacy || $"rules_hash" === rulesHash)
+          .where($"part".isNotNull &&
+                 ($"rules_hash" === legacy || $"rules_hash" === rulesHash))
           .select("part").as[Int].collect().toSet
       }
-      catch { case _: Throwable => Set.empty }
+      catch { case _: org.apache.spark.sql.AnalysisException => Set.empty }
     case None => Set.empty
   }
 
@@ -262,7 +267,7 @@ class ValidationRun(spark: SparkSession, config: EngineConfig) {
           limitParts: Option[Seq[Int]] = None): (DataFrame, DataFrame) = {
     val done = if (resume) completedPartitions() else Set.empty[Int]
     def partFilter(c: org.apache.spark.sql.Column) = {
-      val base = if (done.isEmpty) lit(true) else !c.isin(done.toSeq: _*)
+      val base = if (done.isEmpty) lit(true) else c.isNull || !c.isin(done.toSeq: _*)
       limitParts.map(ps => base && c.isin(ps: _*)).getOrElse(base)
     }
     val todo = docs.where(partFilter($"part"))

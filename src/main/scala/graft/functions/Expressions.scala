@@ -21,6 +21,13 @@ import org.apache.spark.unsafe.types.UTF8String
  * into the primitive eval loop — no per-row InternalRow materialization
  * (which `CodegenFallback`'s whole-row `references[i].eval(row)` forced),
  * and sibling expressions stay fused in the stage.
+ *
+ * The fingerprint kernels (MinHash, SimHash, word shingles, winnowing,
+ * repetition ratio) have one implementation each, over the bytes that
+ * [[TextScratch.lowerAndTokenize]] leaves: ASCII text is lowered in a byte
+ * loop, other text once by `String.toLowerCase`, and both are split on the
+ * six whitespace bytes. Only [[TokenStats]] keeps a String path, because it
+ * counts code points of the original text.
  */
 object Hashing {
   /** First 60 bits of md5 (= first 15 hex chars parsed base-16) — matches
@@ -37,17 +44,6 @@ object Hashing {
     var i = 0
     while (i < 8) { hi = (hi << 8) | (h(i) & 0xffL); i += 1 }
     hi >>> 4
-  }
-  /** Both 60-bit halves (nibbles 0-14 and 15-29) of one md5 — two portable
-    * hash values for the price of one digest. */
-  def md5_60_pair(bytes: Array[Byte]): (Long, Long) = {
-    val d = tl.get(); d.reset()
-    val h = d.digest(bytes)
-    var hi = 0L; var lo = 0L
-    var i = 0
-    while (i < 8) { hi = (hi << 8) | (h(i) & 0xffL); i += 1 }
-    while (i < 16) { lo = (lo << 8) | (h(i) & 0xffL); i += 1 }
-    ((hi >>> 4), ((hi & 0xfL) << 56) | (lo >>> 8))
   }
   // ---- zero-allocation range variants (byte-path expressions) ----
   /** md5 of buf[off, off+len) into `out16` (no digest allocation). */
@@ -83,29 +79,6 @@ object Hashing {
     }
     h * 0x94D049BB133111EBL ^ ((h * 0x94D049BB133111EBL) >>> 31)
   }
-
-  private def isWs(c: Char): Boolean =
-    c == ' ' || c == '\t' || c == '\n' || c == '\u000B' || c == '\f' || c == '\r'
-
-  /** Whitespace tokens (Java regex `\s+` split semantics, empties dropped). */
-  def tokenize(s: String): Array[String] = {
-    val out = scala.collection.mutable.ArrayBuffer[String]()
-    var i = 0; val n = s.length
-    while (i < n) {
-      while (i < n && isWs(s.charAt(i))) i += 1
-      val start = i
-      while (i < n && !isWs(s.charAt(i))) i += 1
-      if (i > start) out += s.substring(start, i)
-    }
-    out.toArray
-  }
-
-  /** normalize = trim + lowercase + collapse internal whitespace to ' '
-    * (matches Text.normalize = trim(regexp_replace(lower(c),"\\s+"," "))). */
-  def normalize(s: String): String = {
-    val toks = tokenize(s.toLowerCase)
-    toks.mkString(" ")
-  }
 }
 
 /**
@@ -113,12 +86,13 @@ object Hashing {
  * the round-1 hot loops allocated a String + a substring per token per row
  * (`UTF8String.toString`, `toLowerCase`, `mkString`), which made the 40 M-doc
  * scaling bench allocation-bound (BENCH r01: 0.66 efficiency, shared-heap GC
- * ceiling). The byte path touches only these thread-local buffers after
- * warmup. ThreadLocal (not per-expression mutable state) keeps eval()
- * thread-safe regardless of how Spark shares expression instances.
+ * ceiling). On ASCII text the byte path touches only these thread-local
+ * buffers after warmup; non-ASCII text pays one lowered String per row.
+ * ThreadLocal (not per-expression mutable state) keeps eval() thread-safe
+ * regardless of how Spark shares expression instances.
  */
 final class TextScratch {
-  var lower: Array[Byte] = new Array[Byte](1 << 10)   // ASCII-lowered copy
+  var lower: Array[Byte] = new Array[Byte](1 << 10)   // lowercased UTF-8 copy
   var tokStart: Array[Int] = new Array[Int](64)
   var tokEnd: Array[Int] = new Array[Int](64)
   var nToks: Int = 0
@@ -138,10 +112,17 @@ final class TextScratch {
     tokStart(nToks) = s; tokEnd(nToks) = e; nToks += 1
   }
 
+  /** Lowercase `u` into [[lower]] as UTF-8 and record whitespace-token
+    * offsets into it; any input. ASCII text takes the byte loop of
+    * [[asciiLowerAndTokenize]]; at the first non-ASCII byte the whole text is
+    * lowered once by the JDK instead ([[lowerUnicodeAndTokenize]]). */
+  def lowerAndTokenize(u: UTF8String): Unit =
+    if (!asciiLowerAndTokenize(u)) lowerUnicodeAndTokenize(u)
+
   /** ASCII-lower `u` into [[lower]] and record whitespace-token offsets.
-    * Returns false when a non-ASCII byte is seen — callers then take the
-    * exact (String-based) slow path, so Unicode semantics are unchanged. */
-  def lowerAndTokenize(u: UTF8String): Boolean = {
+    * Returns false at the first non-ASCII byte, leaving [[lower]] and the
+    * token offsets partial. */
+  def asciiLowerAndTokenize(u: UTF8String): Boolean = {
     val n = u.numBytes
     ensureLower(n)
     val src = u.getBytes // may be the backing array — read-only here
@@ -159,6 +140,28 @@ final class TextScratch {
     }
     if (inTok) addTok(start, n)
     true
+  }
+
+  /** Cold half of [[lowerAndTokenize]]: `String.toLowerCase` over the whole
+    * text (context-dependent mappings such as a word-final Σ see all of it;
+    * invalid UTF-8 decodes to U+FFFD), re-encoded as UTF-8, which can be
+    * longer or shorter than the input (`İ` → `i̇`, KELVIN SIGN → `k`). UTF-8
+    * never puts an ASCII byte inside a multi-byte character, so the
+    * whitespace-byte split yields the same tokens as splitting the String. */
+  private def lowerUnicodeAndTokenize(u: UTF8String): Unit = {
+    val bytes = u.toString.toLowerCase.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    val n = bytes.length
+    ensureLower(n)
+    System.arraycopy(bytes, 0, lower, 0, n)
+    nToks = 0
+    var i = 0; var inTok = false; var start = 0
+    while (i < n) {
+      if (Hashing.isWsByte(lower(i))) {
+        if (inTok) { addTok(start, i); inTok = false }
+      } else if (!inTok) { start = i; inTok = true }
+      i += 1
+    }
+    if (inTok) addTok(start, n)
   }
 
   /** Join tokens [from, from+cnt) of [[lower]] into [[shingle]] separated by
@@ -354,7 +357,7 @@ case class TokenStats(child: Expression, stopwords: Seq[String])
   override def nullSafeEval(v: Any): Any = {
     val u = v.asInstanceOf[UTF8String]
     val sc = TextScratch.tl.get()
-    if (!sc.lowerAndTokenize(u)) return evalSlow(u.toString)
+    if (!sc.asciiLowerAndTokenize(u)) return evalSlow(u.toString)
     val b = sc.lower
     val n = u.numBytes
     var nBpe = 0; var nPunct = 0; var nWs = 0
@@ -437,7 +440,7 @@ case class MinHashSig(child: Expression, k: Int, shingleK: Int, portable: Boolea
   override def nullSafeEval(v: Any): Any = {
     val u = v.asInstanceOf[UTF8String]
     val sc = TextScratch.tl.get()
-    if (!sc.lowerAndTokenize(u)) return evalSlow(u.toString)
+    sc.lowerAndTokenize(u)
     val nt = sc.nToks
     val sig = Array.fill(k)(Long.MaxValue)
     val nSh = if (nt <= shingleK) 1 else nt - shingleK + 1
@@ -471,39 +474,6 @@ case class MinHashSig(child: Expression, k: Int, shingleK: Int, portable: Boolea
     new GenericArrayData(sig)
   }
 
-  /** Exact Unicode path for non-ASCII input (the round-1 String loop). */
-  private def evalSlow(s0: String): Any = {
-    val toks = Hashing.tokenize(s0.toLowerCase)
-    val shingles: Array[String] =
-      if (toks.length <= shingleK) Array(toks.mkString(" "))
-      else Array.tabulate(toks.length - shingleK + 1)(i =>
-        toks.slice(i, i + shingleK).mkString(" "))
-    val sig = Array.fill(k)(Long.MaxValue)
-    var si = 0
-    while (si < shingles.length) {
-      val s = shingles(si)
-      if (portable) {
-        var pair = 0
-        while (pair * 2 < k) {
-          val (h0, h1) = Hashing.md5_60_pair(
-            (s + "#" + pair).getBytes("UTF-8"))
-          if (h0 < sig(pair * 2)) sig(pair * 2) = h0
-          if (pair * 2 + 1 < k && h1 < sig(pair * 2 + 1)) sig(pair * 2 + 1) = h1
-          pair += 1
-        }
-      } else {
-        val bytes = s.getBytes("UTF-8")
-        var i = 0
-        while (i < k) {
-          val h = Hashing.fast64(bytes, i * 0x9E3779B97F4A7C15L + 42L)
-          if (h < sig(i)) sig(i) = h
-          i += 1
-        }
-      }
-      si += 1
-    }
-    new GenericArrayData(sig)
-  }
   override protected def withNewChildInternal(c: Expression): MinHashSig = copy(child = c)
 }
 
@@ -516,7 +486,7 @@ case class SimHashExpr(child: Expression, bits: Int, portable: Boolean)
   override def nullSafeEval(v: Any): Any = {
     val u = v.asInstanceOf[UTF8String]
     val sc = TextScratch.tl.get()
-    if (!sc.lowerAndTokenize(u)) return evalSlow(u.toString)
+    sc.lowerAndTokenize(u)
     java.util.Arrays.fill(sc.votes, 0, bits, 0)
     var t = 0
     while (t < sc.nToks) {
@@ -537,26 +507,6 @@ case class SimHashExpr(child: Expression, bits: Int, portable: Boolean)
     out
   }
 
-  /** Exact Unicode path for non-ASCII input (the round-1 String loop). */
-  private def evalSlow(s0: String): Any = {
-    val toks = Hashing.tokenize(s0.toLowerCase)
-    val votes = new Array[Int](bits)
-    var ti = 0
-    while (ti < toks.length) {
-      val h = if (portable) Hashing.md5_60(toks(ti).getBytes("UTF-8"))
-              else Hashing.fast64(toks(ti).getBytes("UTF-8"), 42L)
-      var b = 0
-      while (b < bits) {
-        if (((h >>> b) & 1L) != 0L) votes(b) += 1 else votes(b) -= 1
-        b += 1
-      }
-      ti += 1
-    }
-    var out = 0L
-    var b = 0
-    while (b < bits) { if (votes(b) > 0) out |= (1L << b); b += 1 }
-    out
-  }
   override protected def withNewChildInternal(c: Expression): SimHashExpr = copy(child = c)
 }
 
@@ -569,7 +519,7 @@ case class WordShingles(child: Expression, k: Int, distinct: Boolean)
   override def nullSafeEval(v: Any): Any = {
     val u = v.asInstanceOf[UTF8String]
     val sc = TextScratch.tl.get()
-    if (!sc.lowerAndTokenize(u)) return evalSlow(u.toString)
+    sc.lowerAndTokenize(u)
     val nt = sc.nToks
     val nSh = if (nt <= k) 1 else nt - k + 1
     // output UTF8Strings must own their bytes (the scratch buffer is reused)
@@ -583,15 +533,6 @@ case class WordShingles(child: Expression, k: Int, distinct: Boolean)
       si += 1
     }
     new GenericArrayData(out.toArray)
-  }
-  /** Exact Unicode path for non-ASCII input (the round-1 String loop). */
-  private def evalSlow(s0: String): Any = {
-    val toks = Hashing.tokenize(s0.toLowerCase)
-    val sh: Array[String] =
-      if (toks.length <= k) Array(toks.mkString(" "))
-      else Array.tabulate(toks.length - k + 1)(i => toks.slice(i, i + k).mkString(" "))
-    val out = if (distinct) sh.distinct else sh
-    new GenericArrayData(out.map(UTF8String.fromString(_)).asInstanceOf[Array[Any]])
   }
   override protected def withNewChildInternal(c: Expression): WordShingles = copy(child = c)
 }
@@ -609,7 +550,7 @@ case class WinnowFingerprints(child: Expression, k: Int, w: Int)
   override def nullSafeEval(v: Any): Any = {
     val u = v.asInstanceOf[UTF8String]
     val sc = TextScratch.tl.get()
-    if (!sc.lowerAndTokenize(u)) return evalSlow(u.toString)
+    sc.lowerAndTokenize(u)
     val nt = sc.nToks
     val nSh = if (nt <= k) 1 else nt - k + 1
     val hs = new Array[Long](nSh)
@@ -641,15 +582,6 @@ case class WinnowFingerprints(child: Expression, k: Int, w: Int)
     while (it.hasNext) { out(x) = it.next().longValue(); x += 1 }
     new GenericArrayData(out)
   }
-  /** Exact Unicode path for non-ASCII input. */
-  private def evalSlow(s0: String): Any = {
-    val toks = Hashing.tokenize(s0.toLowerCase)
-    val sh: Array[String] =
-      if (toks.length <= k) Array(toks.mkString(" "))
-      else Array.tabulate(toks.length - k + 1)(i =>
-        toks.slice(i, i + k).mkString(" "))
-    winnow(sh.map(s => Hashing.md5_60(s.getBytes("UTF-8"))))
-  }
   override protected def withNewChildInternal(c: Expression): WinnowFingerprints = copy(child = c)
 }
 
@@ -666,7 +598,7 @@ case class RepetitionRatio(child: Expression, k: Int)
   override def nullSafeEval(v: Any): Any = {
     val u = v.asInstanceOf[UTF8String]
     val sc = TextScratch.tl.get()
-    if (!sc.lowerAndTokenize(u)) return evalSlow(u.toString)
+    sc.lowerAndTokenize(u)
     val nt = sc.nToks
     if (nt <= k) return 0.0 // single shingle
     val nSh = nt - k + 1
@@ -678,13 +610,6 @@ case class RepetitionRatio(child: Expression, k: Int)
       si += 1
     }
     1.0 - seen.size.toDouble / nSh
-  }
-  /** Exact Unicode path for non-ASCII input. */
-  private def evalSlow(s0: String): Any = {
-    val toks = Hashing.tokenize(s0.toLowerCase)
-    if (toks.length <= k) return 0.0
-    val sh = Array.tabulate(toks.length - k + 1)(i => toks.slice(i, i + k).mkString(" "))
-    1.0 - sh.distinct.length.toDouble / sh.length
   }
   override protected def withNewChildInternal(c: Expression): RepetitionRatio = copy(child = c)
 }

@@ -42,38 +42,6 @@ object Drift {
     MeanShift(column, baseMean, curMean, tol, dev > tol, penalty)
   }
 
-  /** Equi-spaced quantile vector (CDF sample) of a numeric column: one
-    * `percentile_approx` agg, `q` points. */
-  def quantileVector(df: DataFrame, c: String, q: Int = 64): Array[Double] = {
-    val probs = array((1 to q).map(i => lit(i.toDouble / (q + 1))): _*)
-    val row = df.agg(percentile_approx(col(c).cast("double"), probs,
-      lit(10000)).as("q")).collect()(0)
-    if (row.isNullAt(0)) Array.empty
-    else row.getSeq[Double](0).toArray
-  }
-
-  /**
-   * Two-sample KS statistic from two quantile vectors of equal length.
-   * For quantile vectors Qa, Qb sampled at the same probabilities p_i, the KS
-   * statistic is approximated by the max CDF gap over the merged support:
-   * D = max_x |F_a(x) − F_b(x)| where F is linearly interpolated from (Q, p).
-   */
-  def ksFromQuantiles(qa: Array[Double], qb: Array[Double]): Double = {
-    if (qa.isEmpty || qb.isEmpty) return 0.0
-    val n = qa.length
-    val probs = (1 to n).map(_.toDouble / (n + 1)).toArray
-    def cdf(qs: Array[Double], x: Double): Double = {
-      if (x <= qs.head) return 0.0
-      if (x >= qs.last) return 1.0
-      var i = qs.indexWhere(_ > x) // first quantile above x
-      val (x0, x1) = (qs(i - 1), qs(i))
-      val (p0, p1) = (probs(i - 1), probs(i))
-      if (x1 == x0) p1 else p0 + (p1 - p0) * (x - x0) / (x1 - x0)
-    }
-    val support = (qa ++ qb).distinct.sorted
-    support.map(x => math.abs(cdf(qa, x) - cdf(qb, x))).max
-  }
-
   /** Two-sample χ² from two aligned histograms (same bin edges). Bins empty
     * on both sides are skipped; expected counts are scaled for unequal totals
     * (standard two-sample χ² with K1/K2 scaling). */

@@ -36,7 +36,7 @@ class DedupRecallSpec extends SparkSpec {
 
   /** Driver-side shingle set identical to WordShingles(k=3, distinct). */
   private def shingleSet(text: String): Set[String] = {
-    val toks = Hashing.tokenize(text.toLowerCase)
+    val toks = text.toLowerCase.split("\\s+").filter(_.nonEmpty)
     if (toks.length <= 3) Set(toks.mkString(" "))
     else (0 to toks.length - 3).map(i => toks.slice(i, i + 3).mkString(" ")).toSet
   }

@@ -108,6 +108,33 @@ class GoldenEngineSpec extends SparkSpec {
     assert(failedTotal === 10L)
   }
 
+  test("null-part docs: the ledger completes parts 0 and 1, and resume still validates the null part") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-ledger-np").toString
+    val ok = Seq(Span("text", "x", null, 0))
+    val empty = Seq.empty[Span]
+    // "a" is duplicated across part 0 and the null part
+    val np = Seq[(String, Seq[Span], Option[Int])](
+      ("a", ok, Some(0)), ("b", empty, Some(0)), ("c", ok, Some(1)), ("d", ok, Some(1)),
+      ("a", ok, None), ("e", ok, None), ("f", empty, None))
+      .toDF("doc_id", "spans", "part")
+    def cfg(d: String) = EngineConfig(rules = rowRules, ledgerDir = Some(s"$dir/$d"), runId = "np")
+    val oneShot = new ValidationRun(spark, cfg("one"))
+    oneShot.runAndWrite(np, None, s"$dir/one/out")
+    assert(oneShot.completedPartitions() === Set(0, 1))
+    // a run killed after part 0, then resumed
+    val killed = new ValidationRun(spark, cfg("two"))
+    killed.runAndWrite(np, None, s"$dir/two/out", limitParts = Some(Seq(0)))
+    assert(killed.completedPartitions() === Set(0))
+    killed.runAndWrite(np, None, s"$dir/two/out", resume = true)
+    for (name <- Seq("verdicts", "violations")) {
+      def read(d: String) = sortedRows(spark.read.parquet(s"$dir/$d/out/$name"))
+      assert(read("two") === read("one"), name)
+    }
+    val nullPart = spark.read.parquet(s"$dir/two/out/verdicts").where($"part".isNull)
+      .select("total_rows", "failed").as[(Long, Long)].collect()
+    assert(nullPart.toSeq === Seq((3L, 2L))) // "a" (duplicate) and "f" (no spans)
+  }
+
   test("limitParts prunes at the FILE level on a part-partitioned table") {
     // the input contract is an Iceberg-style part-partitioned table; the
     // engine's partFilter must reach the scan as a partition filter so a

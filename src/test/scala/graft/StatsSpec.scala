@@ -145,7 +145,7 @@ class StatsSpec extends SparkSpec {
       .select(size(Text.winnowedFingerprints($"text", 5, 4))).as[Int].collect()(0)
     assert(nf > 0 && nf < 200 - 5 + 1)
     // the tight-loop expression (q45's path) equals the HOF reference
-    // element-for-element on all cases incl. non-ASCII (exact slow path)
+    // element-for-element on all cases, non-ASCII included
     val all = df.union(Seq(big, ("uni", "ü wé α β γ δ ε ζ η")).toDF("id", "text"))
     val parity = all.select($"id",
         graft.functions.F.winnowFingerprints($"text", k, w).as("fast"),
@@ -175,7 +175,7 @@ class StatsSpec extends SparkSpec {
       .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
     assert(got === Map("loop" -> 0.5, "clean" -> 0.0, "short" -> 0.0, "norm" -> 0.5))
     // the tight-loop expression (q44's path) agrees with the HOF reference
-    // on every case, including a non-ASCII doc through the exact slow path
+    // on every case, a non-ASCII doc included
     val df2 = df.union(Seq(("uni", "ü ü ü wé wé")).toDF("id", "text"))
     val both = df2.select($"id",
         round(graft.functions.F.repetitionRatio($"text", 2), 4).as("fast"),
