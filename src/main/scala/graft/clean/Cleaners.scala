@@ -324,7 +324,7 @@ object Cleaners {
     val row = df.agg(aggs.head, aggs.tail: _*).collect()(0)
     val sigs = cols.zipWithIndex.map { case (c, i) =>
       c -> (if (row.isNullAt(i)) 0L else row.getLong(i)) }
-    val keep = sigs.zipWithIndex.filter { case ((c, sig), i) =>
+    val keep = sigs.zipWithIndex.filter { case ((_, sig), i) =>
       !sigs.take(i).exists(_._2 == sig) }.map(_._1._1)
     df.select(keep.map(col): _*)
   }

@@ -49,7 +49,6 @@ object RuleGenerator {
     // profile (IQR bounds), so it stays sequential
     val (dups, profs) = graft.Par(Profiler.duplicateRowCount(df), Profiler.profile(df))
     val profiles = profs.map(p => p.column -> p).toMap
-    val rows = profiles.values.headOption.map(p => p.count + p.nulls).getOrElse(0L)
     val hasDups = dups > 0
 
     // ONE extra agg: Excel-serial rate per column (serial heuristic + DOB/AGE

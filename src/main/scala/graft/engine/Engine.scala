@@ -1,6 +1,7 @@
 package graft.engine
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core._
 import graft.rules.{BoundRule, ValidationEngine}
@@ -13,8 +14,7 @@ object UniquenessCheck {
    * Global uniqueness of `key` over its non-null values (an embedded
    * uniqueness constraint): one hash-aggregate, `(key, dup_count)` for keys
    * seen more than once. No salt: the partial aggregate combines map-side,
-   * so each map task ships at most one partial count per distinct key. That
-   * is the only skew relief — see [[violations]] for the probe side. Null
+   * so each map task ships at most one partial count per distinct key. Null
    * keys are not uniqueness violations (they violate Required instead).
    */
   def duplicateKeys(df: DataFrame, key: String): DataFrame =
@@ -23,23 +23,29 @@ object UniquenessCheck {
       .agg(count(lit(1)).as("dup_count"))
       .where(col("dup_count") > 1)
 
-  /** Violation rows for duplicated keys: left-semi join of the docs table
-    * against the duplicate-key set. The set scales with the duplication RATE
-    * (≈1 M keys at 40 M docs on the bench fixture), so it is hash-joined on
-    * the shuffled key — a forced broadcast would collect it to the driver
-    * and build the hash relation single-threaded. AQE does not split this
-    * join for a hot key: its build side is the aggregate over its shuffle
-    * stage, not a bare stage, so every row of one key goes to one probe
-    * task. */
+  private val Chunk = 1024
+
+  /** Violation rows for duplicated keys, one per row, from two aggregations
+    * and no join: a count per `(key, part)`, whose partial combines a hot key
+    * map-side, a window sum per key, then `n` rows per kept group from arrays
+    * of at most [[Chunk]] elements: a count above `Int.MaxValue` is neither
+    * cast to int nor built into an n-element array. A `partCol` filter above
+    * this stays above the window, so a key duplicated across in- and
+    * out-of-scope parts is still flagged. */
   def violations(df: DataFrame, key: String, partCol: String,
-                 ruleId: String = "unique(doc_id)"): DataFrame = {
-    val dups = duplicateKeys(df, key)
-    df.join(dups.select(col(key)).hint("shuffle_hash"), Seq(key), "left_semi")
+                 ruleId: String = "unique(doc_id)"): DataFrame =
+    df.where(col(key).isNotNull)
+      .groupBy(col(key), col(partCol))
+      .agg(count(lit(1)).as("__n"))
+      .withColumn("__total", sum(col("__n")).over(Window.partitionBy(col(key))))
+      .where(col("__total") > 1)
+      .withColumn("__c", explode(sequence(lit(0L), expr(s"(__n - 1) div $Chunk"))))
+      .withColumn("__row", explode(array_repeat(lit(true),
+        least(lit(Chunk.toLong), col("__n") - col("__c") * Chunk).cast("int"))))
       .select(lit(ruleId).as("rule_id"), col(key).cast("string").as("doc_id"),
               col(partCol).cast("int").as("part"),
               lit(null).cast("int").as("span_offset"),
               lit(s"duplicate $key").as("detail"))
-  }
 }
 
 /** media_ref → asset catalog check (SURVEY J4, north rule). */
@@ -104,10 +110,10 @@ case class EngineConfig(
       * docs table (~40 B/row, MEMORY_AND_DISK). At extreme scale where even
       * the narrow frame shouldn't be spilled (10^12 rows ≈ tens of TB), set
       * false for zero cache: every later read of the narrow frame is then a
-      * column-pruned re-scan — on a full run three id-only scans (uniqueness
-      * key scan, semi-join probe, verdict aggregation), one scan of the
-      * ledger-sketch inputs, and for RI the same column-pruned `spans` scan
-      * a docs-table RI read would be. */
+      * column-pruned re-scan — on a full run two id-only scans (uniqueness,
+      * verdict aggregation), one scan of the ledger-sketch inputs, and for
+      * RI the same column-pruned `spans` scan a docs-table RI read would
+      * be. */
     persistAnnotations: Boolean = true,
     /** Numeric expressions sketched per partition into the ledger as KLL
       * quantile sketches (name → column expr over the docs table), feeding
@@ -160,17 +166,15 @@ case class EngineConfig(
  * the narrow frame covers only in-scope partitions, so it reads the narrow
  * frame only on a full run — nothing skipped by resume, no `limitParts`, no
  * content passthroughs — with a string `doc_id` (narrow stores the id cast
- * to string); otherwise it reads the key twice (key scan + semi-join probe)
- * from the docs table. A passthrough-widened cache costs more to re-read
- * than a pruned parquet scan (a spilled MEMORY_AND_DISK cache stores whole
- * serialized batches). With the frame persisted, a full run with a string
- * key decodes the docs table once; unpersisted, each narrow read is a
- * column-pruned scan (see [[EngineConfig.persistAnnotations]]).
+ * to string); otherwise it reads the key once from the docs table. A
+ * passthrough-widened cache costs more to re-read than a pruned parquet scan
+ * (a spilled MEMORY_AND_DISK cache stores whole serialized batches). With
+ * the frame persisted, a full run with a string key decodes the docs table
+ * once; unpersisted, each narrow read is a column-pruned scan (see
+ * [[EngineConfig.persistAnnotations]]).
  *
- * Skew: the verdicts are one aggregation whose partial combines a hot
- * `doc_id` map-side. The uniqueness semi-join is the one place where every
- * row of a hot id still lands on one probe task (see
- * [[UniquenessCheck.violations]]).
+ * Skew: uniqueness and the verdicts are aggregations whose partials
+ * combine a hot `doc_id` map-side; the RI anti-join is the only join.
  */
 class ValidationRun(spark: SparkSession, config: EngineConfig) {
   import spark.implicits._
@@ -180,7 +184,7 @@ class ValidationRun(spark: SparkSession, config: EngineConfig) {
   require(badUnique.isEmpty, s"${badUnique.mkString(", ")}: the engine checks " +
     "uniqueness on doc_id only (checkUniqueness); use ValidationEngine.validate")
 
-  private def ledgerPath(run: String) = config.ledgerDir.map(d => s"$d/ledger")
+  private def ledgerPath = config.ledgerDir.map(d => s"$d/ledger")
 
   /** Deterministic fingerprint of the configured rule set (FULL specs +
     * reasons, order-independent). Written to every ledger row; resume TRUSTS
@@ -227,7 +231,7 @@ class ValidationRun(spark: SparkSession, config: EngineConfig) {
     * own) never marks anything complete: `run` re-validates those docs on
     * every resume. Only a missing ledger means "nothing completed"; any
     * other read failure propagates. */
-  def completedPartitions(): Set[Int] = ledgerPath(config.runId) match {
+  def completedPartitions(): Set[Int] = ledgerPath match {
     case Some(p) =>
       try {
         val df0 = spark.read.option("mergeSchema", "true").parquet(p)
@@ -420,7 +424,7 @@ class ValidationRun(spark: SparkSession, config: EngineConfig) {
     write(viols, "violations")
     verdicts.cache()
     write(verdicts, "verdicts")
-    ledgerPath(config.runId).foreach { lp =>
+    ledgerPath.foreach { lp =>
       val wallMs = (System.nanoTime() - t0) / 1000000
       // Attempt ordering must survive a wall clock stepping BACKWARD between
       // JVMs (NTP correction, VM clock skew): floor this attempt's ts at

@@ -15,17 +15,14 @@ import graft.core.RuleSpec._
  * pure Catalyst expressions — zero UDFs, fully codegen-friendly. A failure mask
  * is `true` where the row VIOLATES the rule.
  *
- * Two rules are not expressible as a scalar projection:
- *  - [[RuleSpec.Unique]] needs per-value counts → window (small scale) or a
- *    hash-aggregate + semi-join (scale path, see
- *    [[graft.engine.UniquenessCheck]]);
+ * Two rules are not expressible as a scalar projection; each reads a helper
+ * column that [[ValidationEngine.withHelperColumns]] attaches first:
+ *  - [[RuleSpec.Unique]] needs per-value counts → a window count on the key
+ *    ([[attachDupCount]]). The engine's scale path is two aggregations and
+ *    no join ([[graft.engine.UniquenessCheck]]);
  *  - [[RuleSpec.InColumn]] needs the distinct value set of another column →
- *    here a window-free `isin`-style membership via a self-join is avoided: we
- *    compile it as `NOT EXISTS` semantics with a pre-collected broadcast set
- *    only when told the dictionary is small, else callers use the join path.
- * Both still surface through [[failureMask]]: Unique via a window expression
- * and InColumn via a window-collected set is intentionally NOT done — instead
- * [[ValidationEngine]] plans a pre-pass that attaches helper columns.
+ *    a left join against that set, broadcast by AQE when it is small.
+ * [[failureMask]] then compiles both to reads of their helper columns.
  */
 object Rules {
 

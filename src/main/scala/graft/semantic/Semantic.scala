@@ -1,6 +1,6 @@
 package graft.semantic
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.core.{Severity, ValidationIssue, ChangeLog}
 import graft.clean.Cleaners
@@ -241,12 +241,12 @@ object SemanticValidators {
         else None
       }
     }
-    val cross = crossDob.flatMap { case (label, m) =>
+    val cross = crossDob.flatMap { case (label, _) =>
       val n = if (row.isNullAt(row.fieldIndex("cross_dob"))) 0L else row.getAs[Long]("cross_dob")
       if (n > 0) Some(ValidationIssue(label, "UNKNOWN", Severity.Warning,
         "CROSS_DOB_AGE_MISMATCH", s"Age does not match DOB (>$n inconsistencies)",
         n, Nil, "Re-derive Age from DOB")) else None
-    }.toSeq ++ crossNameEmail.flatMap { case (label, m) =>
+    }.toSeq ++ crossNameEmail.flatMap { case (label, _) =>
       val n = if (row.isNullAt(row.fieldIndex("cross_ne"))) 0L else row.getAs[Long]("cross_ne")
       if (n > 0) Some(ValidationIssue(label, "UNKNOWN", Severity.Info,
         "CROSS_NAME_EMAIL_MISMATCH",

@@ -3,7 +3,6 @@ package graft.sim
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.text.Text
 
 /**
  * Similarity search over embedding columns (`array<float>`).

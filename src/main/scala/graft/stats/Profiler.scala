@@ -1,6 +1,6 @@
 package graft.stats
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -50,7 +50,6 @@ object Profiler {
   /** All per-column profiles in a single scan. */
   def profile(df: DataFrame, exactDistinct: Boolean = false,
               withQuantiles: Boolean = true): Seq[ColumnProfile] = {
-    val total = lit(null) // placeholder; count computed via count(lit(1))
     val fields = df.schema.fields
     def n(c: String) = col(c).cast("double")
     val aggs: Seq[Column] = count(lit(1)).as("__rows") +: fields.flatMap { f =>

@@ -1,7 +1,6 @@
 package graft.stats
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 import graft.core.AuditEntry
 
 /**

@@ -463,12 +463,16 @@ class GoldenEngineSpec extends SparkSpec {
     // ids in two parts, rows whose part is null, an id in two parts.
     val ok = Seq(Span("text", "x", null, 0))
     val empty = Seq.empty[Span]
-    val edge = Seq[(String, Seq[Span], Option[Int])](
+    val edgeRows = Seq[(String, Seq[Span], Option[Int])](
       ("dup", ok, Some(0)), ("dup", empty, Some(0)), ("solo", ok, Some(0)),
       (null, ok, Some(0)), (null, empty, Some(0)), (null, ok, Some(1)),
       ("x1", ok, Some(1)), ("x1", ok, Some(2)), ("y", empty, Some(2)), ("z", ok, Some(2)),
-      ("np", ok, None), ("np", empty, None), ("np2", ok, None))
-      .toDF("doc_id", "spans", "part")
+      ("np", ok, None), ("np", empty, None), ("np2", ok, None)) ++
+      // a hot id, every row valid: most of the input, and more rows in
+      // part 0 than one generated uniqueness chunk holds
+      Seq(Some(0) -> 1030, Some(2) -> 20, None -> 1).flatMap { case (p, n) =>
+        Seq.fill(n)(("hot", ok, p)) }
+    val edge = edgeRows.toDF("doc_id", "spans", "part")
     def oracle(rules: Seq[BoundRule], uniq: Boolean): Seq[(Any, Long, Long, Long, String)] = {
       import org.apache.spark.sql.expressions.Window
       val dup = if (!uniq) lit(false)
@@ -499,6 +503,30 @@ class GoldenEngineSpec extends SparkSpec {
     // no violation of their own: "dup", the part-0 null id and "np"
     val lone = ValidationEngine.validate(edge, rowRules.tail).failed
     assert(oracle(rowRules.tail, uniq = false).map(_._4).sum === lone + 3)
+
+    // unique(doc_id) rows: one per in-scope row of an id seen more than
+    // once, for a full run, a limitParts run and the resume after it
+    import org.apache.spark.sql.expressions.Window
+    val dupRows = edge.where($"doc_id".isNotNull)
+      .withColumn("n", count(lit(1)).over(Window.partitionBy($"doc_id")))
+      .where($"n" > 1)
+    def multiset(df: DataFrame) =
+      df.groupBy($"doc_id", $"part").count().as[(String, Option[Int], Long)].collect().toSet
+    val dir = java.nio.file.Files.createTempDirectory("graft-edge").toString
+    val cfg = EngineConfig(rules = rowRules, ledgerDir = Some(dir), runId = "edge")
+    val runs = Seq[(String, ValidationRun => (DataFrame, DataFrame), DataFrame)](
+      ("full", _.run(edge), dupRows),
+      ("limitParts", _.run(edge, limitParts = Some(Seq(0))), dupRows.where($"part" === 0)),
+      ("resume", r => {
+        r.runAndWrite(edge, None, s"$dir/out", limitParts = Some(Seq(0)))
+        r.run(edge, resume = true)
+      }, dupRows.where($"part".isNull || $"part" =!= 0)))
+    for ((name, go, want) <- runs) {
+      val run = new ValidationRun(spark, cfg)
+      val (_, viols) = go(run)
+      assert(multiset(viols.where($"rule_id" === "unique(doc_id)")) === multiset(want), name)
+      run.unpersistAll()
+    }
   }
 
   test("runAndWrite never changes the session's partitionOverwriteMode, fresh or resumed") {
@@ -681,6 +709,28 @@ class GoldenEngineSpec extends SparkSpec {
       .collect().toSeq === Seq(("dup-1", 2L)))
   }
 
+  test("uniqueness violations are two aggregations: no join, no raw row shuffled") {
+    import org.apache.spark.sql.execution.{SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+    import org.apache.spark.sql.execution.adaptive.QueryStageExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val viols = UniquenessCheck.violations(Fixtures.docsPq(spark, 2000, 4), "doc_id", "part")
+    viols.collect()
+    val plan = viols.queryExecution.executedPlan
+    val nodes = PlanCensus.nodes(plan)
+    assert(nodes.collect { case j: BaseJoinExec => j }.isEmpty, plan.toString)
+    val shuffles = nodes.collect { case e: ShuffleExchangeLike => e }
+    assert(shuffles.size === 2, plan.toString)
+    // an exchange's child, seen through AQE stage and codegen wrappers
+    def unwrap(p: SparkPlan): SparkPlan = p match {
+      case q: QueryStageExec => unwrap(q.plan)
+      case w: WholeStageCodegenExec => unwrap(w.child)
+      case other => other
+    }
+    shuffles.foreach(e => assert(unwrap(e.child).isInstanceOf[HashAggregateExec], plan.toString))
+  }
+
   test("source table: where uniqueness and RI read from, per run shape and key type") {
     val work = java.nio.file.Files.createTempDirectory("graft-sources").toString
     val pq = Fixtures.docsPq(spark, 2000, 4)
@@ -688,23 +738,22 @@ class GoldenEngineSpec extends SparkSpec {
     val cfg = EngineConfig(rules = rowRules)
     // (id-only parquet scans, spans decodes besides the rule pass's). A read
     // of the persisted narrow cache is no scan; uniqueness off the docs
-    // table is a key scan + a probe. RI always reads the narrow frame.
+    // table is one key scan. RI always reads the narrow frame.
     val shapes = Seq[(String, Boolean => (Int, Int), (DataFrame, ValidationRun) => (DataFrame, DataFrame))](
-      ("full run", str => if (str) (0, 0) else (2, 0), (d, r) => r.run(d, Some(assets))),
-      // unpersisted narrow reads are column-pruned scans: the uniqueness key
-      // scan, the semi-join probe and the verdict aggregation read ids only
-      // (from narrow or, for a non-string key, the docs table); RI decodes
-      // spans once more
-      ("full run, unpersisted", _ => (3, 1), (d, _) =>
+      ("full run", str => if (str) (0, 0) else (1, 0), (d, r) => r.run(d, Some(assets))),
+      // unpersisted narrow reads are column-pruned scans: uniqueness and the
+      // verdict aggregation read ids only (uniqueness from narrow or, for a
+      // non-string key, the docs table); RI decodes spans once more
+      ("full run, unpersisted", _ => (2, 1), (d, _) =>
         new ValidationRun(spark, cfg.copy(persistAnnotations = false)).run(d, Some(assets))),
-      ("resume", _ => (2, 0), (d, r) => {
+      ("resume", _ => (1, 0), (d, r) => {
         val dir = java.nio.file.Files.createTempDirectory(java.nio.file.Paths.get(work), "r").toString
         val runL = new ValidationRun(spark, cfg.copy(ledgerDir = Some(dir)))
         runL.runAndWrite(d, Some(assets), s"$dir/out", limitParts = Some(Seq(0)))
         runL.run(d, Some(assets), resume = true)
       }),
-      ("limitParts", _ => (2, 0), (d, r) => r.run(d, Some(assets), limitParts = Some(Seq(1, 2)))),
-      ("passthroughs", _ => (2, 0), (d, _) =>
+      ("limitParts", _ => (1, 0), (d, r) => r.run(d, Some(assets), limitParts = Some(Seq(1, 2)))),
+      ("passthroughs", _ => (1, 0), (d, _) =>
         new ValidationRun(spark, cfg.copy(passthroughExprs = Seq(size($"spans").as("__n"))))
           .run(d, Some(assets))))
     for ((shape, expected, go) <- shapes; (keyName, d) <- keys) {
