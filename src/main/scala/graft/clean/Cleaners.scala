@@ -146,34 +146,21 @@ object Cleaners {
       case f if f.dataType.isInstanceOf[NumericType] => f.name }
     val strCols = df.schema.fields.collect {
       case f if f.dataType == StringType => f.name }
-    val medians: Map[String, Double] =
-      if (numCols.isEmpty) Map.empty
-      else {
-        val aggs = numCols.map(c =>
-          percentile_approx(col(c).cast("double"), lit(0.5), lit(10000)).as(c))
-        val row = df.agg(aggs.head, aggs.tail: _*).collect()(0)
-        numCols.zipWithIndex.collect {
-          case (c, i) if !row.isNullAt(i) => c -> row.getDouble(i) }.toMap
-      }
-    val modes: Map[String, String] = Profiler.modes(df, strCols.toSeq)
     // C17 — date median via int64 seconds (`dynamic_cleaner.py:231-238`)
     val tsCols = df.schema.fields.collect {
       case f if f.dataType == TimestampType => f.name }
-    val withTs =
-      if (tsCols.isEmpty) df.na.fill(medians).na.fill(modes)
-      else {
-        val tAggs = tsCols.map(c =>
-          percentile_approx(unix_timestamp(col(c)).cast("double"), lit(0.5),
-            lit(10000)).as(c))
-        val tRow = df.agg(tAggs.head, tAggs.tail: _*).collect()(0)
-        val filled = tsCols.zipWithIndex.foldLeft(df) { case (d, (c, i)) =>
-          if (tRow.isNullAt(i)) d
-          else d.withColumn(c, coalesce(col(c),
-            to_timestamp(from_unixtime(lit(tRow.getDouble(i).toLong)))))
-        }
-        filled.na.fill(medians).na.fill(modes)
-      }
-    withTs
+    // numeric and date medians in one aggregate
+    val med = Profiler.approxQuantiles(df,
+      numCols.toSeq.map(c => c -> col(c)) ++
+        tsCols.toSeq.map(c => c -> unix_timestamp(col(c))), Seq(0.5))
+    val medians: Map[String, Double] =
+      numCols.flatMap(c => med.get(c).map(q => c -> q.head)).toMap
+    val modes: Map[String, String] = Profiler.modes(df, strCols.toSeq)
+    val filled = tsCols.foldLeft(df) { (d, c) =>
+      med.get(c).fold(d)(q => d.withColumn(c, coalesce(col(c),
+        to_timestamp(from_unixtime(lit(q.head.toLong))))))
+    }
+    filled.na.fill(medians).na.fill(modes)
   }
 
   /** C17 — coercion-aware imputation (`dynamic_cleaner.py:209-266`): the
@@ -200,29 +187,22 @@ object Cleaners {
       .filter(c => rate(s"$c::dt") >= 0.6)
     val byMode = missing.filterNot(c => numeric.contains(c) || dates.contains(c))
     var out = df
-    if (numeric.nonEmpty || dates.nonEmpty) {
-      val medAggs =
-        numeric.map(c => percentile_approx(coerceNumeric(col(c)), lit(0.5),
-          lit(10000)).as(s"$c::m")) ++
-        dates.map(c => percentile_approx(
-          unix_timestamp(parseDateOrSerial(col(c))).cast("double"), lit(0.5),
-          lit(10000)).as(s"$c::m"))
-      val m = df.agg(medAggs.head, medAggs.tail: _*).collect()(0)
-      numeric.foreach { c =>
-        val i = m.fieldIndex(s"$c::m")
-        if (!m.isNullAt(i))
-          out = out.withColumn(c, coalesce(col(c),
-            lit(m.getDouble(i)).cast(out.schema(c).dataType)))
+    val med = Profiler.approxQuantiles(df,
+      numeric.map(c => c -> coerceNumeric(col(c))) ++
+        dates.map(c => c -> unix_timestamp(parseDateOrSerial(col(c)))), Seq(0.5))
+    numeric.foreach { c =>
+      med.get(c).foreach { q =>
+        out = out.withColumn(c, coalesce(col(c),
+          lit(q.head).cast(out.schema(c).dataType)))
       }
-      dates.foreach { c =>
-        val i = m.fieldIndex(s"$c::m")
-        if (!m.isNullAt(i)) {
-          val ts = to_timestamp(from_unixtime(lit(m.getDouble(i).toLong)))
-          val fill =
-            if (out.schema(c).dataType == StringType) date_format(ts, "yyyy-MM-dd")
-            else ts.cast(out.schema(c).dataType)
-          out = out.withColumn(c, coalesce(col(c), fill))
-        }
+    }
+    dates.foreach { c =>
+      med.get(c).foreach { q =>
+        val ts = to_timestamp(from_unixtime(lit(q.head.toLong)))
+        val fill =
+          if (out.schema(c).dataType == StringType) date_format(ts, "yyyy-MM-dd")
+          else ts.cast(out.schema(c).dataType)
+        out = out.withColumn(c, coalesce(col(c), fill))
       }
     }
     if (byMode.nonEmpty) out = out.na.fill(Profiler.modes(out, byMode))

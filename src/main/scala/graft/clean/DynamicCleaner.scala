@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.semantic.SemanticCleaners
+import graft.stats.Profiler
 
 /**
  * C37 — rule-precedence orchestration: applies a [[RuleGenerator.GeneratedRules]]
@@ -62,33 +63,24 @@ object DynamicCleaner {
     // 4. Statistical: imputation + outlier clipping (one stats pass each)
     val toImputeMedian = rules.columns.filter(_.handleMissing.contains("impute_with_median"))
       .map(_.column).filter(out.columns.contains)
-    if (toImputeMedian.nonEmpty) {
-      val aggs = toImputeMedian.map(c =>
-        percentile_approx(col(c).cast("double"), lit(0.5), lit(10000)).as(c))
-      val row = out.agg(aggs.head, aggs.tail: _*).collect()(0)
-      val fills = toImputeMedian.zipWithIndex.collect {
-        case (c, i) if !row.isNullAt(i) => c -> row.getDouble(i) }.toMap
-      out = out.na.fill(fills)
-    }
+    if (toImputeMedian.nonEmpty)
+      out = out.na.fill(Profiler.approxQuantiles(out,
+        toImputeMedian.map(c => c -> col(c)), Seq(0.5)).map { case (c, q) => c -> q.head })
     val toMode = rules.columns.filter(_.handleMissing.contains("fill_with_mode"))
       .map(_.column).filter(out.columns.contains)
     if (toMode.nonEmpty) // one melted agg for ALL mode columns, not one job each
-      out = out.na.fill(graft.stats.Profiler.modes(out, toMode))
+      out = out.na.fill(Profiler.modes(out, toMode))
     val toClip = rules.columns.filter(_.handleOutliers.contains("clip_at_bounds"))
       .map(_.column)
       .filter(c => out.columns.contains(c) &&
         out.schema(c).dataType.isInstanceOf[NumericType])
-    if (toClip.nonEmpty) {
-      val aggs = toClip.map(c => percentile_approx(col(c).cast("double"),
-        array(lit(0.25), lit(0.75)), lit(10000)).as(c))
-      val row = out.agg(aggs.head, aggs.tail: _*).collect()(0)
-      toClip.zipWithIndex.foreach { case (c, i) =>
-        if (!row.isNullAt(i)) {
-          val q = row.getSeq[Double](i)
-          val iqr = q(1) - q(0)
-          out = out.withColumn(c, Cleaners.clip(col(c).cast("double"),
-            q(0) - 1.5 * iqr, q(1) + 1.5 * iqr))
-        }
+    val quartiles = Profiler.approxQuantiles(out, toClip.map(c => c -> col(c)),
+      Seq(0.25, 0.75))
+    toClip.foreach { c =>
+      quartiles.get(c).foreach { q =>
+        val iqr = q(1) - q(0)
+        out = out.withColumn(c, Cleaners.clip(col(c).cast("double"),
+          q(0) - 1.5 * iqr, q(1) + 1.5 * iqr))
       }
     }
 

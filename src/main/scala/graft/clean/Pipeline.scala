@@ -180,33 +180,29 @@ class CleaningPipeline(spark: SparkSession, config: CleanConfig = CleanConfig())
       case f if f.dataType.isInstanceOf[NumericType] => f.name }
     if (numCols.isEmpty) { log("OUTLIERS", StageState.PASS, "no numeric cols"); return StageResult(df, StageState.PASS, "") }
     // ONE pass for all bounds
-    val aggs = numCols.flatMap { c =>
+    val bounds: Map[String, (Double, Double)] =
       if (config.outlierMethod == "iqr")
-        Seq(percentile_approx(col(c).cast("double"), array(lit(0.25), lit(0.75)),
-          lit(10000)).as(s"$c::q"))
-      else
-        Seq(avg(col(c).cast("double")).as(s"$c::mu"),
-            stddev_samp(col(c).cast("double")).as(s"$c::sd"))
-    }
-    val row = df.agg(aggs.head, aggs.tail: _*).collect()(0)
+        Profiler.approxQuantiles(df, numCols.toSeq.map(c => c -> col(c)),
+          Seq(0.25, 0.75)).map { case (c, q) =>
+            val iqr = q(1) - q(0)
+            c -> (q(0) - 1.5 * iqr, q(1) + 1.5 * iqr)
+          }
+      else {
+        val aggs = numCols.flatMap(c =>
+          Seq(avg(col(c).cast("double")).as(s"$c::mu"),
+              stddev_samp(col(c).cast("double")).as(s"$c::sd")))
+        val row = df.agg(aggs.head, aggs.tail: _*).collect()(0)
+        numCols.flatMap { c =>
+          val (mi, si) = (row.fieldIndex(s"$c::mu"), row.fieldIndex(s"$c::sd"))
+          if (row.isNullAt(mi) || row.isNullAt(si) || row.getDouble(si) == 0.0) None
+          else Some(c -> (row.getDouble(mi) - 3 * row.getDouble(si),
+                          row.getDouble(mi) + 3 * row.getDouble(si)))
+        }.toMap
+      }
     var out = df
     val clipped = scala.collection.mutable.ArrayBuffer[String]()
     numCols.foreach { c =>
-      val boundsOpt: Option[(Double, Double)] =
-        if (config.outlierMethod == "iqr") {
-          val i = row.fieldIndex(s"$c::q")
-          if (row.isNullAt(i)) None else {
-            val q = row.getSeq[Double](i)
-            val iqr = q(1) - q(0)
-            Some((q(0) - 1.5 * iqr, q(1) + 1.5 * iqr))
-          }
-        } else {
-          val (mi, si) = (row.fieldIndex(s"$c::mu"), row.fieldIndex(s"$c::sd"))
-          if (row.isNullAt(mi) || row.isNullAt(si) || row.getDouble(si) == 0.0) None
-          else Some((row.getDouble(mi) - 3 * row.getDouble(si),
-                     row.getDouble(mi) + 3 * row.getDouble(si)))
-        }
-      boundsOpt.foreach { case (lo, hi) =>
+      bounds.get(c).foreach { case (lo, hi) =>
         val origType = df.schema(c).dataType
         val mask = col(c).cast("double") < lo || col(c).cast("double") > hi
         config.outlierStrategy match { // C19: cap | remove | mark

@@ -14,6 +14,11 @@ import graft.text.Text
  * space is bucket-local; AQE handles bucket skew (giant clusters of
  * near-identical docs are the common skew case at 100 TB).
  *
+ * Both n-gram Jaccard routes verify candidates with one exact verifier
+ * over each document's distinct shingle set: dictionary ids on the exact
+ * route, shingle strings on the banded one. No operator decides its plan
+ * from a driver-side action.
+ *
  * `portable = true` uses md5-derived hashes (identical in any SQL engine,
  * used by oracle-checked tests); `false` uses xxhash64 (the fast path).
  */
@@ -196,14 +201,7 @@ object Dedup {
 
   // ---------------------------------------------------------- n-gram Jaccard
 
-  /** NOTE: with `freqOrdered = true` (the default) this method is NOT a
-    * pure plan builder — it eagerly runs one small aggregate (the hash
-    * collision certificate over the distinct-shingle frame) during
-    * construction, because the verify representation (hash vs string
-    * arrays) is chosen from its result. Callers that only want a plan to
-    * inspect should pass `freqOrdered = false`.
-    *
-    * n-gram Jaccard pairs ≥ `minJaccard`, with a threshold-adaptive candidate
+  /** n-gram Jaccard pairs ≥ `minJaccard`, with a threshold-adaptive candidate
     * strategy (VERDICT r2 item 2):
     *
     *  - `minJaccard ≥ 0.5` (or `forceExact`): EXACT prefix filtering — recall
@@ -219,68 +217,49 @@ object Dedup {
     *    J=0.5, ≈2e-22 at the J≥0.9 near-dups real corpora (and this
     *    fixture) actually contain, degrading to ~10% only for pairs sitting
     *    exactly at the J=0.3 floor. Set `forceExact` for audit-grade runs
-    *    where the borderline band must be complete. */
+    *    where the borderline band must be complete.
+    *
+    * The exact route stores each document's shingle set as an array of
+    * shingle DICTIONARY ids (one id per distinct shingle). The id map is
+    * injective, so |∩| over ids equals |∩| over the strings and the output
+    * is exact by construction. No action runs to choose a plan, but this is
+    * still not a pure plan builder: under AQE the two lazy
+    * `localCheckpoint`s (dictionary and shingle sets) call `execute()` while
+    * the plan is built, which runs their upstream shuffle-stage jobs. */
   def ngramJaccardPairs(df: DataFrame, textCol: String, idCol: String,
                         shingleK: Int = 3, minJaccard: Double = 0.5,
                         portable: Boolean = true,
-                        freqOrdered: Boolean = true,
                         forceExact: Boolean = false): DataFrame = {
     if (minJaccard < 0.5 && !forceExact)
       return ngramJaccardPairsViaMinhash(df, textCol, idCol, shingleK,
         minJaccard, portable)
-    val distinctSh =
-      graft.functions.F.wordShingles(col("__txt"), shingleK, distinct = true)
     // parallelism floor BEFORE the CPU-heavy shingle explode (see [[spread]])
-    val base = spread(df.select(col(idCol).as("id"), col(textCol).as("__txt")))
-    // canonical global order for the prefix principle: any TOTAL order works
-    // for exactness; (document-frequency asc, shingle) — the AllPairs
-    // rarest-first order — keeps the hottest (most common) shingles OUT of
-    // prefixes, which is what bounds candidate-bucket sizes at 100 TB.
-    // freqOrdered=false falls back to plain lexicographic (one less shuffle).
-    //
-    // VERIFY REPRESENTATION: the r5 shape carried shingle STRING arrays into
-    // the verify join and intersected those — measured 13.3 CPU-sec at sf0.1
-    // (325 k candidate pairs × array_intersect over two ~52-element string
-    // arrays). Verification only needs |∩| (then |∪| = nₐ + n_b − |∩|), so
-    // the arrays are reduced to 60-bit shingle HASHES — ~8× cheaper to
-    // intersect and half the bytes shuffled — GUARDED by an exact global
-    // collision certificate: one tiny agg over the (already-computed)
-    // distinct-shingle frame checks count(shingle) == count_distinct(hash).
-    // Certificate holds ⇒ hash equality ⇔ string equality ⇒ |∩| (and the
-    // output) is bit-identical to the string plan; in the astronomically
-    // rare failure case the string plan runs instead. The certificate rides
-    // the same freq aggregate the rarest-first order needs anyway.
-    val toks = base.select(col("id"), explode(distinctSh).as("tok"))
-    // freq is consumed twice (collision certificate + rarest-first join) and
-    // would otherwise re-run the full shingle explode + aggregate for each:
-    // a LAZY localCheckpoint lets the certificate action below materialize
-    // it once, and the sh-build join reads the materialized result (guide
-    // §3.3 — materialize a reused intermediate instead of recomputing it)
-    val freq = toks.groupBy("tok").agg(count(lit(1)).as("df"))
+    val toks = spread(df.select(col(idCol).as("id"), col(textCol).as("__txt")))
+      .select(col("id"), explode(graft.functions.F.wordShingles(col("__txt"),
+        shingleK, distinct = true)).as("tok"))
+    // the shingle dictionary: document frequency (for the order below) and
+    // one id per distinct shingle. `monotonically_increasing_id` depends on
+    // each row's position in its partition, so the lazy localCheckpoint is
+    // what fixes the ids: they are numbered once, when it is materialised,
+    // and a retried task can never renumber a shingle. Ids are unique across
+    // partitions by construction (partition index in the upper bits).
+    val dict = toks.groupBy("tok").agg(count(lit(1)).as("df"))
+      .withColumn("sid", monotonically_increasing_id())
       .localCheckpoint(false)
-    val hashVerify: Boolean = freqOrdered && {
-      val r = freq.agg(count(lit(1)),
-        count_distinct(h(col("tok"), portable))).collect()(0)
-      val ok = r.getLong(0) == r.getLong(1)
-      if (!ok) System.err.println(
-        "[graft.dedup] shingle-hash collision detected — exact jaccard falls " +
-        "back to string-array verification")
-      ok
-    }
-    // the shingle-array frame feeds THREE branches (prefix tokens + both
-    // verify sides); checkpointing it runs the collect_list aggregate once
-    // instead of once per branch
-    val sh: DataFrame =
-      if (!freqOrdered)
-        base.select(col("id"), array_sort(distinctSh).as("sh"))
-      else {
-        val elem = if (hashVerify) h(col("tok"), portable) else col("tok")
-        toks.join(freq, "tok")
-          .groupBy("id")
-          .agg(transform(sort_array(collect_list(struct(col("df").as("df"),
-            elem.as("e")))), s => s.getField("e")).as("sh"))
-          .localCheckpoint(false)
-      }
+    // canonical global order for the prefix principle: any TOTAL order works
+    // for exactness; (document-frequency asc, id) — the AllPairs
+    // rarest-first order — keeps the hottest (most common) shingles OUT of
+    // prefixes, which is what bounds candidate-bucket sizes at 100 TB. Long
+    // id arrays are far cheaper to intersect and shuffle than the shingle
+    // strings (OPTIMIZATION_r06.md §q20, measured with same-width hashes).
+    // The set frame feeds THREE branches (prefix tokens + both verify
+    // sides); checkpointing it runs the collect_list aggregate once instead
+    // of once per branch.
+    val sh = toks.join(dict, "tok")
+      .groupBy("id")
+      .agg(transform(sort_array(collect_list(struct(col("df"), col("sid")))),
+        s => s.getField("sid")).as("sh"))
+      .localCheckpoint(false)
     val n = size(col("sh"))
     // required prefix for recall 1.0 is n − ⌈t·n⌉ + 1; the epsilon inside
     // ceil keeps double rounding from inflating ⌈t·n⌉ and shortening the
@@ -304,25 +283,21 @@ object Dedup {
       .repartition(P, col("tok")) // shared by both join sides → ONE exchange
     // Two exactness-preserving candidate prunes (AllPairs/PPJoin, public
     // literature — Bayardo et al. WWW'07, Xiao et al. WWW'08):
-    //  - length filter: J ≥ t ⇒ |∩| ≥ t·|∪| ≥ t·max(|a|,|b|) and
-    //    |∩| ≤ min(|a|,|b|), so min ≥ t·max prunes size-mismatched pairs;
+    //  - length filter (see [[lengthFilter]]);
     //  - positional filter: if the shared token sits at 0-based prefix
     //    position i in a and j in b (arrays share ONE canonical total
     //    order), the overlap can't exceed 1 + min(|a|−i−1, |b|−j−1), which
     //    must reach the equivalent overlap threshold α = ⌈t/(1+t)·(|a|+|b|)⌉.
     // Both run inside the join condition, before the distinct/verify stages.
     // Each bound is relaxed by the RELATIVE PruneEps so double rounding can
-    // only make the prune MORE conservative: e.g. 100·0.55 evaluates to
-    // 55.00000000000001, which would wrongly prune an |a|=100,|b|=55
-    // containment pair at exactly J = t (55 ≥ 55.000…01 is false); likewise
-    // ceil() at an integer boundary (ADVICE r4).
+    // only make the prune MORE conservative; likewise ceil() at an integer
+    // boundary (ADVICE r4).
     val alpha = ceil(lit(minJaccard / (1 + minJaccard) * (1 - PruneEps)) *
       (col("a.n") + col("b.n")))
     val cands = tokens.alias("a")
       .join(tokens.alias("b"),
         col("a.tok") === col("b.tok") && col("a.id") < col("b.id") &&
-          least(col("a.n"), col("b.n")).cast("double") >=
-            greatest(col("a.n"), col("b.n")) * (minJaccard * (1 - PruneEps)) &&
+          lengthFilter(col("a.n"), col("b.n"), minJaccard) &&
           (lit(1) + least(col("a.n") - col("a.pos") - 1,
                           col("b.n") - col("b.pos") - 1)) >= alpha)
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
@@ -330,21 +305,32 @@ object Dedup {
       // the partitioning — no extra exchange) and the verify stage at P
       // tasks instead of AQE's byte-coalesced 3
       .repartition(P, col("id_a"), col("id_b")).distinct()
-    // re-join the (small) candidate set back to the shingle arrays; exact
-    // verify — array_intersect is order-independent, so the canonical
-    // ordering never affects the result, only the candidate volume. The
-    // arrays are distinct SETS by construction, so |∪| = nₐ + n_b − |∩|
-    // exactly — the r5 plan paid a second hash-set pass (array_union) per
-    // candidate pair just to re-derive a size it already knew.
-    val sa = withPrefix.select(col("id").as("id_a"), col("sh").as("sh_a"),
-      col("n").as("n_a"))
-    val sb = withPrefix.select(col("id").as("id_b"), col("sh").as("sh_b"),
-      col("n").as("n_b"))
+    verifyJaccard(cands, withPrefix, minJaccard)
+  }
+
+  /** Length filter: J ≥ t ⇒ |∩| ≥ t·|∪| ≥ t·max(|a|,|b|) and
+    * |∩| ≤ min(|a|,|b|), so min ≥ t·max prunes size-mismatched pairs. The
+    * RELATIVE PruneEps keeps it conservative at exact-threshold pairs:
+    * 100·0.55 evaluates to 55.00000000000001, which would wrongly prune an
+    * |a|=100, |b|=55 containment pair at exactly J = t. */
+  private def lengthFilter(na: Column, nb: Column, t: Double): Column =
+    least(na, nb).cast("double") >= greatest(na, nb) * (t * (1 - PruneEps))
+
+  /** The one exact Jaccard verify of both routes: re-join the candidate
+    * pairs (`id_a`, `id_b`) to the shingle sets (`id`, `sh`, `n` = size), prune
+    * by length, and keep pairs with J ≥ `t`. The arrays are distinct SETS by
+    * construction (strings or dictionary ids), so |∪| = nₐ + n_b − |∩|
+    * exactly — no second hash-set pass per pair. The intersection is
+    * order-independent, so the element order never affects the result. */
+  private def verifyJaccard(cands: DataFrame, sets: DataFrame, t: Double): DataFrame = {
+    def side(s: String) = sets.select(col("id").as(s"id_$s"), col("sh").as(s"sh_$s"),
+      col("n").as(s"n_$s"))
     val inter = size(array_intersect(col("sh_a"), col("sh_b"))).cast("double")
-    cands.join(sa, "id_a").join(sb, "id_b")
+    cands.join(side("a"), "id_a").join(side("b"), "id_b")
+      .where(lengthFilter(col("n_a"), col("n_b"), t))
       .select(col("id_a"), col("id_b"),
         (inter / (col("n_a") + col("n_b") - inter)).as("jaccard"))
-      .where(col("jaccard") >= minJaccard)
+      .where(col("jaccard") >= t)
   }
 
   /** Analytic LSH S-curve recall for a pair at Jaccard `j` under banded
@@ -356,11 +342,11 @@ object Dedup {
     1.0 - math.pow(1.0 - math.pow(j, r), b)
 
   /** Low-threshold scale path for [[ngramJaccardPairs]]: banded-MinHash
-    * candidate pairs (bucket-local join, q17b machinery) + exact
-    * `array_intersect/union` verification. The length filter
-    * (J ≥ t ⇒ t·max(|a|,|b|) ≤ min(|a|,|b|)) prunes size-mismatched
-    * candidates before the shingle re-join. Shuffle cost is O(k·docs) band
-    * keys + O(candidates), never O(Σ prefix²/bucket).
+    * candidate pairs (bucket-local join, q17b machinery) + the exact
+    * [[verifyJaccard]] over shingle STRING sets — this route needs no
+    * frequency order, and a dictionary would cost it two more shuffles.
+    * Shuffle cost is O(k·docs) band keys + O(candidates), never
+    * O(Σ prefix²/bucket).
     *
     * Every call logs the analytic S-curve recall at the requested threshold
     * (zero extra jobs). */
@@ -386,19 +372,7 @@ object Dedup {
       .withColumn("n", size(col("sh"))) // sized AFTER the projection so the
         // CodegenFallback shingle expr evaluates once, not twice
       .localCheckpoint(false)
-    val sa = sh.select(col("id").as("id_a"), col("sh").as("sh_a"), col("n").as("n_a"))
-    val sb = sh.select(col("id").as("id_b"), col("sh").as("sh_b"), col("n").as("n_b"))
-    // arrays are distinct sets ⇒ |∪| = nₐ + n_b − |∩| exactly (no second
-    // hash-set pass per pair; same arithmetic as the exact path)
-    val inter = size(array_intersect(col("sh_a"), col("sh_b"))).cast("double")
-    cands.join(sa, "id_a").join(sb, "id_b")
-      // relative epsilon keeps the length prune strictly conservative at
-      // exact-threshold pairs (same rounding case as the exact path's filter)
-      .where(least(col("n_a"), col("n_b")).cast("double") >=
-             greatest(col("n_a"), col("n_b")) * (minJaccard * (1 - PruneEps)))
-      .select(col("id_a"), col("id_b"),
-        (inter / (col("n_a") + col("n_b") - inter)).as("jaccard"))
-      .where(col("jaccard") >= minJaccard)
+    verifyJaccard(cands, sh, minJaccard)
   }
 
   // ------------------------------------------------- embedding near-dup

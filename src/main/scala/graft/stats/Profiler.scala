@@ -202,11 +202,23 @@ object Profiler {
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
   }
 
+  /** Approximate quantiles of MANY named expressions in ONE aggregate:
+    * `percentile_approx(e, probs, 10000)` over each expression cast to
+    * double. Returns name → quantiles in `probs` order; an expression with
+    * no non-null input has a null result and is absent from the map. */
+  def approxQuantiles(df: DataFrame, exprs: Seq[(String, Column)],
+                      probs: Seq[Double]): Map[String, Seq[Double]] = {
+    if (exprs.isEmpty) return Map.empty
+    val aggs = exprs.map { case (name, e) =>
+      percentile_approx(e.cast("double"), array(probs.map(lit): _*), lit(10000)).as(name) }
+    val row = df.agg(aggs.head, aggs.tail: _*).collect()(0)
+    exprs.indices.collect {
+      case i if !row.isNullAt(i) => exprs(i)._1 -> row.getSeq[Double](i).toSeq }.toMap
+  }
+
   /** A10 — IQR outlier bounds + count (`outliers.py:21-26`: 1.5×IQR). */
   def iqrOutliers(df: DataFrame, c: String, factor: Double = 1.5): OutlierBounds = {
-    val q = df.agg(percentile_approx(col(c).cast("double"),
-      array(lit(0.25), lit(0.75)), lit(10000))).collect()(0)
-      .getAs[scala.collection.Seq[Double]](0)
+    val q = approxQuantiles(df, Seq(c -> col(c)), Seq(0.25, 0.75))(c)
     val (q1, q3) = (q(0), q(1))
     val iqr = q3 - q1
     val (lo, hi) = (q1 - factor * iqr, q3 + factor * iqr)

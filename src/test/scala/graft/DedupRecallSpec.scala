@@ -61,19 +61,33 @@ class DedupRecallSpec extends SparkSpec {
     assert(borderline >= 5, s"want borderline pairs, got $borderline")
   }
 
-  test("hash-verified exact path (freqOrdered) ≡ string-verified path (lexicographic), jaccard included") {
-    // r6 moved the freq-ordered exact path's verify to 60-bit shingle
-    // hashes behind a global collision certificate; the lexicographic path
-    // still verifies on strings. Both are exact, so pairs AND jaccard
-    // values must be identical — this pins the certificate-gated hash plan
-    // against the unhashed reference plan.
-    val df = docs.toDF("doc_id", "text")
-    def run(freqOrdered: Boolean) =
-      Dedup.ngramJaccardPairs(df, "text", "doc_id", shingleK = 3,
-          minJaccard = 0.3, forceExact = true, freqOrdered = freqOrdered)
-        .select($"id_a", $"id_b", round($"jaccard", 9).as("j"))
+  test("jaccard values on both routes equal a driver-side brute force") {
+    // three edge inputs on top of the shared fixture, in a frame of this
+    // test's own: two texts identical to doc 0 (J = 1.0 with it and with
+    // each other), a 3-token doc (ONE shingle) and a null text, which must
+    // appear in no pair
+    val extra: Seq[(Long, Option[String])] = Seq(
+      (1000L, Some(docs.head._2)), (1001L, Some(docs.head._2)),
+      (1002L, Some("w1 w2 w3")), (1003L, None))
+    val all = docs.map { case (id, t) => (id, Option(t)) } ++ extra
+    val df = all.toDF("doc_id", "text")
+    def r9(j: Double) = BigDecimal(j).setScale(9, BigDecimal.RoundingMode.HALF_UP).toDouble
+    val sets = all.collect { case (id, Some(t)) => id -> shingleSet(t) }
+    val want = (for {
+      (ia, sa) <- sets; (ib, sb) <- sets if ia < ib
+      j = (sa & sb).size.toDouble / (sa | sb).size if j >= 0.3
+    } yield (ia, ib, r9(j))).toSet
+    assert(want.contains((1000L, 1001L, 1.0)) && want.contains((0L, 1000L, 1.0)))
+    def rows(pairs: org.apache.spark.sql.DataFrame) =
+      pairs.select($"id_a", $"id_b", round($"jaccard", 9))
         .as[(Long, Long, Double)].collect().toSet
-    assert(run(freqOrdered = true) === run(freqOrdered = false))
+    val exact = rows(Dedup.ngramJaccardPairs(df, "text", "doc_id", shingleK = 3,
+      minJaccard = 0.3, forceExact = true))
+    assert(exact === want)
+    val banded = rows(Dedup.ngramJaccardPairsViaMinhash(df, "text", "doc_id",
+      shingleK = 3, minJaccard = 0.3))
+    assert((banded -- want).isEmpty, s"banded rows off the brute force: ${banded -- want}")
+    assert(banded.contains((1000L, 1001L, 1.0)))
   }
 
   test("exact path keeps pairs at EXACTLY J = t (prunes are epsilon-conservative)") {

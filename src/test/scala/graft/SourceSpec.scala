@@ -7,7 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * binary and hide its matches; write `\u0000` in string literals. The
   * program never mutates the session conf: a setting one run flips is seen
   * by every other run sharing the session, so per-operation settings go on
-  * the operation (a writer option, a hint). */
+  * the operation (a writer option, a hint). The dedup pair operators decide
+  * nothing from a driver-side result while their plans are built. */
 class SourceSpec extends AnyFunSuite {
   private def scalaFiles(dir: String) = {
     import scala.jdk.CollectionConverters._
@@ -31,6 +32,13 @@ class SourceSpec extends AnyFunSuite {
       (line, i) <- Files.readAllLines(f).toArray(Array.empty[String]).zipWithIndex
       if line.contains("conf.set(") || line.contains("conf.unset(")
     } yield s"$f:${i + 1}: ${line.trim}"
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("dedup/Dedup.scala runs no collect: pair operators only build plans") {
+    val f = Paths.get("src/main/scala/graft/dedup/Dedup.scala")
+    val hits = Files.readAllLines(f).toArray(Array.empty[String]).zipWithIndex
+      .collect { case (line, i) if line.contains(".collect(") => s"$f:${i + 1}: ${line.trim}" }
     assert(hits.isEmpty, hits.mkString("\n"))
   }
 }
