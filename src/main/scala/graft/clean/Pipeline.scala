@@ -1,6 +1,6 @@
 package graft.clean
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.core.AuditEntry
@@ -43,7 +43,7 @@ case class StageResult(df: DataFrame, state: StageState.Value, detail: String)
  * expressions, so the whole pipeline materializes in a handful of scans
  * instead of the reference's copy-per-stage model.
  */
-class CleaningPipeline(spark: SparkSession, config: CleanConfig = CleanConfig()) {
+class CleaningPipeline(config: CleanConfig = CleanConfig()) {
 
   private val auditBuf = scala.collection.mutable.ArrayBuffer[AuditEntry]()
   def audit: Seq[AuditEntry] = auditBuf.toSeq

@@ -48,9 +48,12 @@ object UniquenessCheck {
               lit(s"duplicate $key").as("detail"))
 }
 
-/** media_ref → asset catalog check (SURVEY J4, north rule). */
+/** media_ref → asset catalog check (SURVEY J4, north rule): the column
+  * and rule id [[ValidationEngine.violationsFromNarrow]] checks against a
+  * catalog. */
 object ReferentialIntegrity {
-  private val RefsCol = "__media_refs"
+  private[graft] val RefsCol = "__media_refs"
+  val RuleId = "referential_integrity(media_ref)"
 
   /** A docs row's media references, `array<struct<media_ref, offset>>` over
     * the `spans` column; text spans never join, so only spans carrying a
@@ -61,25 +64,12 @@ object ReferentialIntegrity {
       s => struct(s.getField("media_ref").as("media_ref"),
                   s.getField("offset").as("offset"))).as(RefsCol)
 
-  /** RI violations of a docs table: [[violationsFromRefs]] over its
-    * [[refs]]. */
+  /** RI violations of a docs table: the violation generator with no rules,
+    * one row per dangling reference. Catalyst/AQE picks broadcast vs
+    * shuffle from the catalog's measured size. */
   def violations(docs: DataFrame, assets: DataFrame): DataFrame =
-    violationsFromRefs(docs.select(col("doc_id"), col("part"), refs), assets)
-
-  /** RI violations of a frame holding `doc_id`, `part` and the [[refs]]
-    * column: one row per reference, anti-joined against the catalog.
-    * Catalyst/AQE picks broadcast vs shuffle from the catalog's measured
-    * size. */
-  def violationsFromRefs(df: DataFrame, assets: DataFrame): DataFrame = {
-    val refRows = df.select(col("doc_id"), col("part"), explode(col(RefsCol)).as("s"))
-      .select(col("doc_id"), col("part"), col("s.media_ref").as("media_ref"),
-              col("s.offset").as("span_offset"))
-    refRows.join(assets, refRows("media_ref") === assets("asset_id"), "left_anti")
-      .select(lit("referential_integrity(media_ref)").as("rule_id"),
-              col("doc_id").cast("string").as("doc_id"), col("part"),
-              col("span_offset").cast("int").as("span_offset"),
-              concat(lit("dangling media_ref "), col("media_ref")).as("detail"))
-  }
+    ValidationEngine.violationsFromNarrow(
+      ValidationEngine.annotateNarrow(docs, Nil, "doc_id", "part", Seq(refs)), Nil, Some(assets))
 }
 
 /** Driver-side attempt clock for ledger rows: wall-clock millis, bumped to
@@ -111,9 +101,9 @@ case class EngineConfig(
       * the narrow frame shouldn't be spilled (10^12 rows ≈ tens of TB), set
       * false for zero cache: every later read of the narrow frame is then a
       * column-pruned re-scan — on a full run two id-only scans (uniqueness,
-      * verdict aggregation), one scan of the ledger-sketch inputs, and for
-      * RI the same column-pruned `spans` scan a docs-table RI read would
-      * be. */
+      * verdict aggregation), one scan of the ledger-sketch inputs, and one
+      * `spans` scan for the violations (RI's media refs ride the row
+      * violations' read). */
     persistAnnotations: Boolean = true,
     /** Numeric expressions sketched per partition into the ledger as KLL
       * quantile sketches (name → column expr over the docs table), feeding
@@ -159,10 +149,15 @@ case class EngineConfig(
  * + one groupBy(part) aggregate (2 Spark jobs total), NOT a driver loop over
  * partitions. Only resume bookkeeping is per-partition.
  *
+ * Violations: one generator ([[ValidationEngine.violationsFromNarrow]])
+ * turns one read of the narrow rule-pass frame into the row, span and RI
+ * violations: RI's media refs are a column of the rule-pass projection,
+ * exploded beside the rule structs, and only the ref rows can fail the
+ * catalog anti-join. Uniqueness' rows are unioned on.
+ *
  * Reads of the docs table (pinned by a scan census in GoldenEngineSpec).
- * RI always reads the narrow rule-pass frame: its media refs are a column
- * of the rule-pass projection. So do the verdict aggregation and the ledger
- * sketches. Uniqueness holds the only source decision: it is global, while
+ * The violations, the verdict aggregation and the ledger sketches read the
+ * narrow frame. Uniqueness holds the only source decision: it is global, while
  * the narrow frame covers only in-scope partitions, so it reads the narrow
  * frame only on a full run — nothing skipped by resume, no `limitParts`, no
  * content passthroughs — with a string `doc_id` (narrow stores the id cast
@@ -292,7 +287,8 @@ class ValidationRun(spark: SparkSession, config: EngineConfig) {
         narrow.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       else narrow
     narrowFrame = Some(narrowP)
-    val rowViolations = ValidationEngine.violationsFromNarrow(narrowP, rowRules)
+    // Row, span and RI violations: one generator, one read of the frame.
+    val generated = ValidationEngine.violationsFromNarrow(narrowP, rowRules, catalog)
 
     // The one source decision (class comment): uniqueness reads the narrow
     // frame only on a full run with a string doc_id — narrow stores doc_id
@@ -301,17 +297,14 @@ class ValidationRun(spark: SparkSession, config: EngineConfig) {
       config.passthroughExprs.isEmpty &&
       docs.schema.exists(f => f.name == "doc_id" &&
         f.dataType == org.apache.spark.sql.types.StringType)
-    val extra = Seq(
-      Option.when(config.checkUniqueness) {
-        val src = if (uniqViaNarrow) narrowP.select($"doc_id", $"part") else docs
-        UniquenessCheck.violations(src, "doc_id", "part").where(partFilter(col("part")))
-      },
-      catalog.map(a => ReferentialIntegrity.violationsFromRefs(narrowP, a))
-    ).flatten
+    val uniqueness = Option.when(config.checkUniqueness) {
+      val src = if (uniqViaNarrow) narrowP.select($"doc_id", $"part") else docs
+      UniquenessCheck.violations(src, "doc_id", "part").where(partFilter(col("part")))
+    }
     // Violations are tiny relative to the input; cache so the verdict
     // aggregation and the artifact write evaluate the scan+rules once, not
     // twice. Released by unpersistAll.
-    val allViolations = (rowViolations +: extra).reduce(_.unionByName(_)).cache()
+    val allViolations = uniqueness.fold(generated)(generated.unionByName(_)).cache()
     violationsFrame = Some(allViolations)
 
     // Per-partition verdicts: rows whose (doc_id, part) key carries ANY

@@ -25,8 +25,10 @@ object Fixtures {
   /** Stable on-disk copies of the fixtures, so the driver's DuckDB oracle can
     * `read_parquet()` the EXACT rows the Spark queries consumed (and so the
     * engine queries read real files instead of re-generating per run). Bump
-    * [[FixtureVersion]] whenever a generator changes. */
-  val FixtureDir = "/root/repo/target/fixtures"
+    * [[FixtureVersion]] whenever a generator changes. Absolute, resolved
+    * against the working directory, so a checkout's run keeps to its own
+    * `target/`. */
+  val FixtureDir: String = new java.io.File("target/fixtures").getAbsolutePath
   val FixtureVersion = "v2"
 
   def fixturePath(name: String): String =

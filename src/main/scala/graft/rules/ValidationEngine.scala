@@ -2,6 +2,7 @@ package graft.rules
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, BooleanType, IntegerType, StringType, StructType}
 import graft.core._
 import graft.core.RuleSpec._
 
@@ -142,31 +143,63 @@ object ValidationEngine {
     annotated.select(cols: _*)
   }
 
-  /** Violation rows from an [[annotateNarrow]] frame: failing rows explode
-    * one struct per rule, and the failing ones are kept. */
-  def violationsFromNarrow(narrow: DataFrame, rules: Seq[BoundRule]): DataFrame = {
-    val perRule: Seq[Column] = rules.zipWithIndex.map { case (r, i) =>
-      struct(
-        lit(r.spec.ruleId).as("rule_id"),
-        col(maskCol(i)).as("failed"),
-        col(s"__off_$i").as("span_offset"),
-        lit(r.reason).as("detail"))
+  /** One violation row, before the catalog check: rule rows carry a null
+    * `media_ref`, ref rows a null `detail`. */
+  private val Entry = new StructType().add("rule_id", StringType)
+    .add("failed", BooleanType).add("span_offset", IntegerType)
+    .add("detail", StringType).add("media_ref", StringType)
+
+  /** THE violation generator: rows `(rule_id, doc_id, part, span_offset,
+    * detail)` of an [[annotateNarrow]] frame, for row, span and (given a
+    * `catalog`) referential-integrity rules, from ONE explode over one read
+    * of the frame. Each kept row explodes one struct per rule plus one per
+    * media ref of the [[graft.engine.ReferentialIntegrity.refs]] column (the
+    * frame must carry it when a catalog is given), and the failed entries
+    * go through a single `left_anti` join on `media_ref = asset_id`. Rule
+    * entries have a null `media_ref`, which never matches, so they pass
+    * through and only dangling refs survive beside them (the embedded RI
+    * constraint: a ref is checked only where it exists).
+    *
+    * Under a shuffled anti-join the rule entries' null keys all hash to one
+    * reducer. AQE's `OptimizeSkewedJoin` can split that partition, because
+    * a `left_anti` join's left side feeds a bare shuffle stage. */
+  def violationsFromNarrow(narrow: DataFrame, rules: Seq[BoundRule],
+                           catalog: Option[DataFrame] = None): DataFrame = {
+    import graft.engine.ReferentialIntegrity.{RefsCol, RuleId}
+    val none = array().cast(ArrayType(Entry)) // array() alone is array<null>
+    val perRule =
+      if (rules.isEmpty) none
+      else array(rules.zipWithIndex.map { case (r, i) =>
+        struct(
+          lit(r.spec.ruleId).as("rule_id"),
+          col(maskCol(i)).as("failed"),
+          col(s"__off_$i").as("span_offset"),
+          lit(r.reason).as("detail"),
+          lit(null).cast("string").as("media_ref"))
+      }: _*)
+    val failing = col(StatusCol) === "FAIL"
+    val (keep, entries) = catalog match {
+      case None => (failing, perRule)
+      // a row with null spans has null refs: coalesced, or concat would be
+      // null and drop the row's own rule violations
+      case Some(_) => (failing || size(col(RefsCol)) > 0, concat(perRule, coalesce(
+        transform(col(RefsCol), s => struct(lit(RuleId).as("rule_id"),
+          lit(true).as("failed"), s.getField("offset").cast("int").as("span_offset"),
+          lit(null).cast("string").as("detail"), s.getField("media_ref").as("media_ref"))),
+        none)))
     }
-    narrow
-      .filter(col(StatusCol) === "FAIL")
-      .select(col("doc_id"), col("part"),
-              explode(array(perRule: _*)).as("v"))
+    val failed = narrow.where(keep)
+      .select(col("doc_id"), col("part"), explode(entries).as("v"))
       .where(col("v.failed"))
       .select(col("v.rule_id").as("rule_id"), col("doc_id"), col("part"),
-              col("v.span_offset").as("span_offset"), col("v.detail").as("detail"))
+              col("v.span_offset").as("span_offset"), col("v.detail").as("detail"),
+              col("v.media_ref").as("media_ref"))
+    val checked = catalog.fold(failed)(a =>
+      failed.join(a, failed("media_ref") === a("asset_id"), "left_anti"))
+    checked.select(col("rule_id"), col("doc_id"), col("part"), col("span_offset"),
+      coalesce(col("detail"), concat(lit("dangling media_ref "), col("media_ref")))
+        .as("detail"))
   }
-
-  /** Violation table (rule_id, doc_id, part, span_offset, detail) — the north
-    * rule's artifact. One pass: failing rows explode their failing-rule
-    * structs; spans are only inspected for span-level rules. */
-  def violations(df: DataFrame, rules: Seq[BoundRule],
-                 idCol: String, partCol: String): DataFrame =
-    violationsFromNarrow(annotateNarrow(df, rules, idCol, partCol), rules)
 
   /** Offset of the first offending span for span-level rules; null when
     * that span's offset is null and for every other rule (read from the

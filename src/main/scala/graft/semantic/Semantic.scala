@@ -197,8 +197,8 @@ object SemanticValidators {
       }
     // LOCATION casing (V6) is distribution-level: istitle ratio in (0.1, 0.9)
     val locCols = typeMap.collect { case (c, m) if m.detectedType == LOCATION => c }.toSeq.sorted
-    val crossDob = crossDobAgeMask(df, typeMap, runTs)
-    val crossNameEmail = crossNameEmailMask(df, typeMap)
+    val crossDob = crossDobAgeMask(typeMap, runTs)
+    val crossNameEmail = crossNameEmailMask(typeMap)
 
     if (masks.isEmpty && locCols.isEmpty && crossDob.isEmpty && crossNameEmail.isEmpty)
       return Nil
@@ -258,7 +258,7 @@ object SemanticValidators {
 
   /** V8 — |((runTs − dob)/365.25) − age| > 2, dob parsed multi-format
     * (`validator.py:140-182`); pure column math. */
-  def crossDobAgeMask(df: DataFrame, typeMap: Map[String, TypeMetadata],
+  def crossDobAgeMask(typeMap: Map[String, TypeMetadata],
                       runTs: java.sql.Timestamp): Option[(String, Column)] = {
     import ColumnType._
     for {
@@ -276,7 +276,7 @@ object SemanticValidators {
   /** V9 — no name token (len>2) in the email local part, with
     * first-initial+lastname fallback (`validator.py:184-222`) — higher-order
     * functions only, no UDF. */
-  def crossNameEmailMask(df: DataFrame, typeMap: Map[String, TypeMetadata]): Option[(String, Column)] = {
+  def crossNameEmailMask(typeMap: Map[String, TypeMetadata]): Option[(String, Column)] = {
     import ColumnType._
     for {
       nameCol <- typeMap.toSeq.sortBy(_._1).find(_._2.detectedType == PERSON_NAME).map(_._1)

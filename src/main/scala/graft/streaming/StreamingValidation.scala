@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.engine.ReferentialIntegrity
 import graft.rules.{BoundRule, ValidationEngine}
 
 /**
@@ -21,8 +22,9 @@ import graft.rules.{BoundRule, ValidationEngine}
  *    unbounded state (use the batch engine's uniqueness agg per completed
  *    partition, or a watermarked `dropDuplicates`); referential integrity
  *    needs a stream-static join against the asset catalog — provided here
- *    via [[violationsStream]]'s optional `assets` argument (stream-static
- *    left-anti joins are supported by Spark for append output).
+ *    via [[violationsStream]]'s optional `assets` argument: the batch
+ *    generator's one `left_anti` join, with the stream on the left
+ *    (supported by Spark for append output).
  *  - Per-partition verdicts become per-(event-time window, part) verdict
  *    counts with a watermark bounding state ([[windowedVerdicts]]) — the
  *    streaming analogue of the batch ledger row.
@@ -49,20 +51,18 @@ object StreamingValidation {
       "use the batch engine (uniqueness agg) or watermarked dropDuplicates")
   }
 
-  /** Violation rows from a streaming docs frame — append-mode friendly
-    * (stateless projection + explode; plus an optional stream-static
-    * left-anti join for media_ref referential integrity). Output schema is
-    * the batch artifact's `(rule_id, doc_id, part, span_offset, detail)`. */
+  /** Violation rows from a streaming docs frame — append-mode friendly:
+    * the batch engine's generator
+    * ([[ValidationEngine.violationsFromNarrow]]), a stateless projection +
+    * explode whose optional catalog check is a stream-static `left_anti`
+    * join with the stream on the left. Output schema is the batch
+    * artifact's `(rule_id, doc_id, part, span_offset, detail)`. */
   def violationsStream(stream: DataFrame, rules: Seq[BoundRule],
                        assets: Option[DataFrame] = None): DataFrame = {
     requireStreamable(rules)
-    val rowViolations = ValidationEngine.violations(stream, rules, "doc_id", "part")
-    assets match {
-      case None => rowViolations
-      case Some(cat) =>
-        rowViolations.unionByName(
-          graft.engine.ReferentialIntegrity.violations(stream, cat))
-    }
+    val narrow = ValidationEngine.annotateNarrow(stream, rules, "doc_id", "part",
+      assets.map(_ => ReferentialIntegrity.refs).toSeq)
+    ValidationEngine.violationsFromNarrow(narrow, rules, assets)
   }
 
   /** Watermarked streaming dedup on `keyCol` — the streaming face of the

@@ -86,7 +86,7 @@ class CleanersSpec extends SparkSpec {
     val emp = Fixtures.employees(spark)
     val cfg = CleanConfig(caseMode = "none", removeDuplicates = true,
       destructiveRowDeletion = true)
-    val pipe = new CleaningPipeline(spark, cfg)
+    val pipe = new CleaningPipeline(cfg)
     // header standardization first (stage-0 equivalent, cleaning_engine.py:68-91)
     val renamed = Cleaners.renameHeaders(emp)
     assert(renamed.columns.contains("full_name"))

@@ -457,6 +457,122 @@ class GoldenEngineSpec extends SparkSpec {
     run.unpersistAll()
   }
 
+  /** Reference for the one violation generator, from two: (all, RI) where
+    * RI is the media refs exploded on their own and anti-joined against the
+    * catalog, and all adds the rule structs exploded from the narrow frame. */
+  def twoGenerators(d: DataFrame, rules: Seq[BoundRule], a: DataFrame): (DataFrame, DataFrame) = {
+    val narrow = ValidationEngine.annotateNarrow(d, rules, "doc_id", "part",
+      Seq(ReferentialIntegrity.refs))
+    val rows = narrow.filter($"_val_status" === "FAIL")
+      .select($"doc_id", $"part", explode(array(rules.zipWithIndex.map { case (r, i) =>
+        struct(lit(r.spec.ruleId).as("rule_id"), col(s"__mask_$i").as("failed"),
+          col(s"__off_$i").as("span_offset"), lit(r.reason).as("detail")) }: _*)).as("v"))
+      .where($"v.failed")
+      .select($"v.rule_id".as("rule_id"), $"doc_id", $"part",
+        $"v.span_offset".as("span_offset"), $"v.detail".as("detail"))
+    val refRows = narrow.select($"doc_id", $"part", explode($"__media_refs").as("s"))
+      .select($"doc_id", $"part", $"s.media_ref".as("media_ref"), $"s.offset".as("span_offset"))
+    val ri = refRows.join(a, refRows("media_ref") === a("asset_id"), "left_anti")
+      .select(lit("referential_integrity(media_ref)").as("rule_id"), $"doc_id", $"part",
+        $"span_offset".cast("int").as("span_offset"),
+        concat(lit("dangling media_ref "), $"media_ref").as("detail"))
+    (rows.unionByName(ri), ri)
+  }
+
+  def violationMultiset(df: DataFrame): Map[List[Any], Int] =
+    df.select("rule_id", "doc_id", "part", "span_offset", "detail").collect()
+      .map(_.toSeq.toList).groupBy(identity).view.mapValues(_.length).toMap
+
+  /** Rows at the generator's edges: null spans (so null refs) with a null
+    * id, a rule failure carrying a dangling ref, refs to a present asset
+    * beside text spans, one dangling asset referenced twice, empty spans. */
+  lazy val genEdge = Seq[(String, Seq[Span], Int)](
+    (null, null, 0),
+    ("bad+dangling", Seq(Span("image", null, "gone", 2), Span("image", null, "asset-1", 1)), 0),
+    ("present", Seq(Span("text", "hi", null, 0), Span("image", null, "asset-1", 1)), 1),
+    ("twice", Seq(Span("text", "x", null, 0), Span("image", null, "gone-2", 1),
+                  Span("image", null, "gone-2", 2)), 1),
+    ("empty", Seq.empty[Span], 1)).toDF("doc_id", "spans", "part")
+
+  test("one violation generator: edge rows give the two generators' multiset, RI-only too") {
+    val (want, wantRi) = twoGenerators(genEdge, rowRules, assets)
+    val run = new ValidationRun(spark, EngineConfig(rules = rowRules, checkUniqueness = false))
+    val (_, viols) = run.run(genEdge, Some(assets))
+    val got = violationMultiset(viols)
+    run.unpersistAll()
+    assert(got === violationMultiset(want))
+    val riOnly = violationMultiset(ReferentialIntegrity.violations(genEdge, assets))
+    assert(riOnly === violationMultiset(wantRi))
+    // a run with no row rules: uniqueness (no duplicate ids here) and RI
+    val noRules = new ValidationRun(spark, EngineConfig(rules = Nil))
+    assert(violationMultiset(noRules.run(genEdge, Some(assets))._2) === riOnly)
+    noRules.unpersistAll()
+    // and what the edges must give: the null-spans row keeps its rule rows,
+    // a failing row also reports its dangling ref, present refs and text
+    // spans report nothing
+    val byDoc = got.toSeq.flatMap { case (r, n) => Seq.fill(n)(r(1) -> r(0).toString) }
+      .groupMap(_._1)(_._2).view.mapValues(_.sorted).toMap
+    assert(byDoc(null) === Seq("required(doc_id)", "spans_non_empty"))
+    assert(byDoc("bad+dangling") === Seq("referential_integrity(media_ref)", "span_offsets_monotonic"))
+    assert(byDoc("twice") === Seq.fill(2)("referential_integrity(media_ref)"))
+    assert(!byDoc.contains("present"))
+    assert(riOnly.values.sum === 3)
+    assert(got(List("referential_integrity(media_ref)", "bad+dangling", 0, 2,
+      "dangling media_ref gone")) === 1)
+  }
+
+  /** The nodes of the plan the violations cache of a [[ValidationRun.run]]
+    * was built from; each read of another cache in it is a leaf. */
+  def cachedViolationsPlan(viols: DataFrame): Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    val Seq(cache) = PlanCensus.nodes(viols.queryExecution.executedPlan, intoCaches = false)
+      .collect { case im: InMemoryTableScanExec => im }
+    PlanCensus.nodes(cache.relation.cachedPlan, intoCaches = false)
+  }
+
+  test("violations plan: row and RI violations come from one read of the narrow cache") {
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    // uniqueness reads the narrow frame on this full run with a string id:
+    // its read is the only other one
+    for ((uniq, reads) <- Seq(true -> 2, false -> 1)) {
+      val run = new ValidationRun(spark, EngineConfig(rules = rowRules, checkUniqueness = uniq))
+      val (_, viols) = run.run(Fixtures.docsPq(spark, 2000, 4), Some(Fixtures.assets(spark)))
+      viols.count()
+      val narrow = PlanCensus.nodes(run.lastNarrow.get.queryExecution.executedPlan)
+        .collectFirst { case im: InMemoryTableScanExec => im.relation.cacheBuilder }.get
+      val plan = cachedViolationsPlan(viols)
+      val inner = plan.collect { case im: InMemoryTableScanExec => im }
+      assert(inner.size === reads, s"uniqueness=$uniq\n${plan.head}")
+      assert(inner.forall(_.relation.cacheBuilder eq narrow), plan.head.toString)
+      run.unpersistAll()
+    }
+  }
+
+  test("a shuffled catalog anti-join gives the broadcast join's violations") {
+    import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec}
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    def violations(d: DataFrame): (Map[List[Any], Int], Seq[BaseJoinExec]) = {
+      val run = new ValidationRun(spark, EngineConfig(rules = rowRules))
+      val (_, viols) = run.run(d, Some(Fixtures.assets(spark)))
+      val got = violationMultiset(viols)
+      val joins = cachedViolationsPlan(viols).collect { case j: BaseJoinExec => j }
+      run.unpersistAll()
+      (got, joins)
+    }
+    for (d <- Seq(genEdge, Fixtures.docsPq(spark, 2000, 4))) {
+      val (broadcast, bJoins) = violations(d)
+      val before = spark.conf.getOption(key)
+      spark.conf.set(key, "-1")
+      val (shuffled, sJoins) =
+        try violations(d)
+        finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+      assert(bJoins.size === 1 && bJoins.forall(_.isInstanceOf[BroadcastHashJoinExec]), bJoins)
+      assert(sJoins.size === 1 && !sJoins.exists(_.isInstanceOf[BroadcastHashJoinExec]), sJoins)
+      assert(shuffled === broadcast)
+      assert(broadcast.keys.exists(_.head == "referential_integrity(media_ref)"))
+    }
+  }
+
   test("verdicts at the edges equal the oracle's shared-fate rule per (part, doc_id)") {
     // q30: a row fails when any row with its (part, coalesce(doc_id, NUL))
     // key has a violation. Edges: an id duplicated inside one part, null
@@ -743,8 +859,8 @@ class GoldenEngineSpec extends SparkSpec {
       ("full run", str => if (str) (0, 0) else (1, 0), (d, r) => r.run(d, Some(assets))),
       // unpersisted narrow reads are column-pruned scans: uniqueness and the
       // verdict aggregation read ids only (uniqueness from narrow or, for a
-      // non-string key, the docs table); RI decodes spans once more
-      ("full run, unpersisted", _ => (2, 1), (d, _) =>
+      // non-string key, the docs table); RI rides the violations' one read
+      ("full run, unpersisted", _ => (2, 0), (d, _) =>
         new ValidationRun(spark, cfg.copy(persistAnnotations = false)).run(d, Some(assets))),
       ("resume", _ => (1, 0), (d, r) => {
         val dir = java.nio.file.Files.createTempDirectory(java.nio.file.Paths.get(work), "r").toString

@@ -25,7 +25,7 @@ class JobCountSpec extends SparkSpec {
     .toDF("a", "b", "c", "d", "s1", "s2", "s3")
 
   test("detectTypes: one sample + one agg, not 3 jobs per string column") {
-    val pipe = new CleaningPipeline(spark, CleanConfig())
+    val pipe = new CleaningPipeline(CleanConfig())
     val n = jobs { pipe.detectTypes(wide) }
     assert(n <= 3, s"detectTypes ran $n jobs (3 string cols would cost ~9 in the per-column shape)")
   }
@@ -93,5 +93,27 @@ class JobCountSpec extends SparkSpec {
     val n3 = jobs { graft.stats.Drift.checkMany(base, cur, Seq("b", "c", "d")) }
     assert(n3 === n1, s"checkMany ran $n3 jobs for 3 columns vs $n1 for 1")
     assert(n3 <= 4, s"checkMany ran $n3 jobs (expected 2 agg actions)")
+  }
+
+  test("validate-shaped engine run: the violations read the narrow cache once") {
+    import graft.core.RuleSpec._
+    import graft.engine.{EngineConfig, ValidationRun}
+    import graft.rules.BoundRule
+    val rules = Seq(BoundRule(Required("doc_id")), BoundRule(SpanOffsetsMonotonic()),
+      BoundRule(SpanFieldConsistency()), BoundRule(SpansNonEmpty()))
+    val docs = graft.fixtures.Fixtures.docsPq(spark, 2000, 4)
+    val assets = graft.fixtures.Fixtures.assets(spark)
+    def noop(df: org.apache.spark.sql.DataFrame): Unit =
+      df.write.format("noop").mode("overwrite").save()
+    val run = new ValidationRun(spark, EngineConfig(rules))
+    val n = jobs {
+      val (verdicts, viols) = run.run(docs, Some(assets))
+      noop(viols)
+      noop(verdicts)
+    }
+    run.unpersistAll()
+    // AQE gives each read of a cache its own table-cache stage job, so a
+    // second read of the narrow frame for the RI refs would make this 11
+    assert(n === 10, s"run + two noops ran $n jobs")
   }
 }

@@ -137,7 +137,7 @@ class ReportConfigSpec extends SparkSpec {
     // drive the pipeline purely from the parsed config
     val df = Seq(("  Ann  ", "IT", 30), ("Bob", "Sales", 200), (null, "HR", 41))
       .toDF("name", "dept", "age")
-    val pipe = new CleaningPipeline(spark, cfg.clean)
+    val pipe = new CleaningPipeline(cfg.clean)
     val (out, state) = pipe.run(df)
     assert(state !== StageState.FAIL)
     assert(out.where($"name" === "ann").count() === 1)     // trimmed + lowered
